@@ -53,10 +53,10 @@ spark = get_spark("scale_bench", cores=cores, shuffle_partitions=cores,
                                "33554432"}})
 udfs = make_udfs(spark)
 pages = spark.read.parquet({pages!r})
-# warm-up: JIT, Python worker pool, broadcast ship (small slice)
-warm = run_quality_filter(spark, pages.limit(2000), udfs=udfs,
-                          parallelism=cores)  # limit() collapses to 1
-                                              # partition; re-fan-out
+# warm-up: JIT, Python worker pool, broadcast ship (small slice;
+# limit() collapses to 1 partition, so re-fan-out)
+warm = run_quality_filter(spark, pages.limit(2000).repartition(cores),
+                          udfs=udfs)
 warm.verdicts.write.format("noop").mode("overwrite").save()
 t0 = time.perf_counter()
 out = run_quality_filter(spark, pages, udfs=udfs)

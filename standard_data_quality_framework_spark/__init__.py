@@ -9,10 +9,10 @@ scrub pipeline over Common-Crawl-style pages:
     pages(url string, warc_ts timestamp, html binary, text string, lang string)
 
 Architecture is Spark-first: declarative DataFrame plans, native column
-expressions for every heuristic signal, vectorized pandas/Arrow UDFs only
-for the four stages that genuinely need Python (HTML text extraction,
-char-n-gram language ID, n-gram perplexity, repetition signals, regex
-scrub), broadcast model artifacts, AQE + explicit partitioning for scale.
+expressions for every heuristic signal, ONE fused pandas/Arrow UDF for
+the work that genuinely needs Python (HTML text extraction, char-n-gram
+language ID, n-gram perplexity, repetition signals, regex scrub),
+broadcast model artifacts, AQE + explicit partitioning for scale.
 """
 
 __version__ = "0.1.0"

@@ -1,13 +1,11 @@
-"""Vectorized pandas/Arrow UDFs — the ONLY Python that runs on executors.
+"""The fused pandas/Arrow UDF — the ONLY Python that runs on executors.
 
-Exactly four Python stages exist in the whole pipeline (everything else
-is native Catalyst expressions):
-
-  1. ``extract_text(html: binary) -> string``   (byte-identical contract)
-  2. ``model_signals(text) -> struct``          (langid + perplexity +
-     repetition signals in ONE Arrow pass — one Python worker round-trip
-     per batch instead of three)
-  3. ``scrub(text) -> struct<scrubbed, edits>`` (byte-identical contract)
+One Python stage exists in the whole pipeline (everything else is
+native Catalyst expressions): ``process_page(payload, is_html)`` does
+HTML text extraction, langid, perplexity, repetition signals and the
+PII scrub in ONE Arrow round trip per batch. Extracted and scrubbed
+text are byte-identical to the reference labeler by construction: both
+call the kernels in ``textpure``.
 
 Model artifacts (langid log-prob matrix ~1 MB, bigram LM ~1 MB) are
 broadcast once per session and lazily referenced inside the UDF closure
@@ -25,20 +23,6 @@ from ..models.langid import train_langid
 from ..models.perplexity import train_perplexity
 from .textpure import extract_text, repetition_signals, scrub
 
-_MODEL_SIGNALS_SCHEMA = T.StructType([
-    T.StructField("lang_pred", T.StringType()),
-    T.StructField("lang_conf", T.DoubleType()),
-    T.StructField("perplexity", T.DoubleType()),
-    T.StructField("dup_line_frac", T.DoubleType()),
-    T.StructField("top2gram_frac", T.DoubleType()),
-    T.StructField("dup5gram_frac", T.DoubleType()),
-])
-
-_SCRUB_SCHEMA = T.StructType([
-    T.StructField("scrubbed_text", T.StringType()),
-    T.StructField("scrub_edits", T.IntegerType()),
-])
-
 _PROCESS_SCHEMA = T.StructType([
     T.StructField("etext", T.StringType()),
     T.StructField("lang_pred", T.StringType()),
@@ -53,42 +37,11 @@ _PROCESS_SCHEMA = T.StructType([
 
 
 def make_udfs(spark: SparkSession) -> dict:
-    """Build the UDF trio with models broadcast to executors."""
+    """Build the fused ``process_page`` UDF with models broadcast to
+    executors. Returned as a dict keyed by UDF name."""
     sc = spark.sparkContext
     b_lid = sc.broadcast(train_langid())
     b_ppl = sc.broadcast(train_perplexity())
-
-    @F.pandas_udf(T.StringType())
-    def extract_text_udf(html: pd.Series) -> pd.Series:
-        return html.map(lambda b: extract_text(b) if b is not None else "")
-
-    @F.pandas_udf(_MODEL_SIGNALS_SCHEMA)
-    def model_signals_udf(text: pd.Series) -> pd.DataFrame:
-        lid = b_lid.value
-        lm = b_ppl.value
-        langs, confs, ppls, d1, d2, d3 = [], [], [], [], [], []
-        for t in text:
-            t = t if isinstance(t, str) else ""
-            lang, conf = lid.predict_one(t)
-            langs.append(lang)
-            confs.append(conf)
-            ppls.append(lm.perplexity(t))
-            a, b, c = repetition_signals(t)
-            d1.append(a)
-            d2.append(b)
-            d3.append(c)
-        return pd.DataFrame({
-            "lang_pred": langs, "lang_conf": confs, "perplexity": ppls,
-            "dup_line_frac": d1, "top2gram_frac": d2, "dup5gram_frac": d3,
-        })
-
-    @F.pandas_udf(_SCRUB_SCHEMA)
-    def scrub_udf(text: pd.Series) -> pd.DataFrame:
-        pairs = [scrub(t if isinstance(t, str) else "") for t in text]
-        return pd.DataFrame({
-            "scrubbed_text": [p[0] for p in pairs],
-            "scrub_edits": pd.array([p[1] for p in pairs], dtype="int32"),
-        })
 
     @F.pandas_udf(_PROCESS_SCHEMA)
     def process_page_udf(payload: pd.Series,
@@ -137,9 +90,4 @@ def make_udfs(spark: SparkSession) -> dict:
         out["scrub_edits"] = out["scrub_edits"].astype("int32")
         return out
 
-    return {
-        "extract_text": extract_text_udf,
-        "model_signals": model_signals_udf,
-        "scrub": scrub_udf,
-        "process_page": process_page_udf,
-    }
+    return {"process_page": process_page_udf}

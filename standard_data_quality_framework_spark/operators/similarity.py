@@ -23,57 +23,22 @@ from ..fanout import fan_out
 from ..functions.hashing import hyperplanes
 
 
-def _dot(a, b, dim: int | None = None):
-    """Σ aᵢ·bᵢ with the exact fold order of
-    ``aggregate(zip_with(a,b,*), 0.0, +)`` — ((0 + a₀b₀) + a₁b₁)…
-
-    ``dim`` known → an unrolled left-associated Add chain of
-    GetArrayItem products, which stays inside whole-stage codegen.
-    Bit-identical: addition order is unchanged and Catalyst does not
-    re-associate float arithmetic. Callers passing ``dim`` assert
-    every array has exactly that length (a shorter array would throw
-    under ANSI, not yield a partial sum).
-
-    WHERE EACH FORM WINS (measured, r6 probes; full ledger in
-    OPTIMIZATION_r06.md): in a plain projection the unrolled chain
-    executes ~5× faster than the fold lambda (0.26 s vs 1.24 s per
-    5M rows × 64 dims) — but it carries ~0.5–1 s of codegen+JIT
-    compile per query RUN (expression ids differ per invocation, so
-    the generated-source cache misses), and inside a JOIN's codegen
-    consume path a 64-term chain touching BOTH join sides hits a 10×
-    cliff (18.5 s vs 1.8 s at 16 terms / 52M pairs —
-    CSE/method-splitting re-materializes the array accessors). The
-    fold lambda evaluates at ~0.25 µs per 64-dim row — 5 ms for a
-    20k-vector norm pass — so per-VECTOR work never amortizes the
-    unrolled form's compile cost and per-PAIR work is faster as the
-    lambda anyway. Rule used across this module: FOLD LAMBDA
-    everywhere, norms always hoisted out of the pair loop (the actual
-    3× win); ``dim`` stays available for callers with genuinely
-    compile-once/execute-huge profiles.
-    """
-    if dim is None:
-        return F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
-                           F.lit(0.0), lambda acc, x: acc + x)
-    acc = F.lit(0.0)
-    for i in range(dim):
-        acc = acc + a.getItem(i) * b.getItem(i)
-    return acc
+def _dot(a, b):
+    """Σ aᵢ·bᵢ as the fold ``aggregate(zip_with(a,b,*), 0.0, +)`` —
+    ((0 + a₀b₀) + a₁b₁)…, the summation order that
+    dedup._bucket_pairs_arrow replicates bit for bit. The fold lambda
+    beat an unrolled GetArrayItem chain end to end (the chain pays
+    codegen+JIT per run and hits a method-split cliff in join consume
+    paths — ledger in OPTIMIZATION_r06.md (3)); the per-pair win is
+    hoisting each side's norm out of the pair loop, done at every
+    call site."""
+    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
+                       F.lit(0.0), lambda acc, x: acc + x)
 
 
-def _sqnorm(a, dim: int | None = None):
-    if dim is None:
-        return F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x)
-    acc = F.lit(0.0)
-    for i in range(dim):
-        acc = acc + a.getItem(i) * a.getItem(i)
-    return acc
-
-
-def _cos(a, b, dim: int | None = None):
-    dot = _dot(a, b, dim)
-    na = F.sqrt(_sqnorm(a, dim))
-    nb = F.sqrt(_sqnorm(b, dim))
-    return dot / (na * nb)
+def _sqnorm(a):
+    """Σ aᵢ², same left fold as ``_dot``."""
+    return F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x)
 
 
 def cosine_topk(candidates: DataFrame, queries: DataFrame, id_col: str,

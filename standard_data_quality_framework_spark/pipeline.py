@@ -8,8 +8,8 @@
 Design notes (scale-first):
   * ONE pass: every per-document signal is computed in a single
     ``select`` — Catalyst fuses the projections into one whole-stage-
-    codegen span plus exactly one Arrow round-trip for the two pandas
-    UDF stages. (The reference re-scans the dataset once per check —
+    codegen span plus exactly one Arrow round-trip for the fused
+    pandas UDF. (The reference re-scans the dataset once per check —
     /root/reference/src/quality_checks.py:360-380 — we do not.)
   * The only full-row shuffle before the sinks is the exact-duplicate
     exchange (hash-partition by (crawl day, md5(text))). Content
@@ -18,8 +18,8 @@ Design notes (scale-first):
     dedup is an aggregate+join (O(n) streaming on the hot key), never
     a window sort; see with_verdict. Per-domain aggregations (skewed!)
     go through ``salted_domain_counts``.
-  * Native expressions everywhere except the four documented UDFs
-    (functions/udfs.py). No row-at-a-time Python, no collect().
+  * Native expressions everywhere except the one fused UDF
+    (functions/udfs.py). No row-at-a-time Python UDFs, no collect().
 
 Heuristic semantics recast the reference's checks per SURVEY.md §0;
 rule ids and thresholds live in config.RULES / config.RULE_ORDER.
@@ -37,25 +37,7 @@ from .functions.udfs import make_udfs
 
 
 # ---------------------------------------------------------------------------
-# Stage 1: extract
-# ---------------------------------------------------------------------------
-
-def with_extracted_text(df: DataFrame, udfs: dict) -> DataFrame:
-    """etext = extract_text(html) when html present, else raw text.
-
-    The byte-identical per-url contract binds ``etext``: both this UDF
-    and the reference labeler call textpure.extract_text.
-    """
-    return df.withColumn(
-        "etext",
-        F.when(F.col("html").isNotNull(),
-               udfs["extract_text"](F.col("html")))
-        .otherwise(F.coalesce(F.col("text"), F.lit(""))),
-    )
-
-
-# ---------------------------------------------------------------------------
-# Stage 2: signals (native + one UDF struct)
+# Native signals
 # ---------------------------------------------------------------------------
 
 _TOKEN = r"[^ \t\n\x0B\f\r]+"
@@ -113,18 +95,8 @@ def with_native_signals(df: DataFrame, text_col: str = "etext") -> DataFrame:
     return df
 
 
-def with_model_signals(df: DataFrame, udfs: dict,
-                       text_col: str = "etext") -> DataFrame:
-    """langid + perplexity + repetition — ONE Arrow round-trip."""
-    df = df.withColumn("_ms", udfs["model_signals"](F.col(text_col)))
-    for f in ("lang_pred", "lang_conf", "perplexity",
-              "dup_line_frac", "top2gram_frac", "dup5gram_frac"):
-        df = df.withColumn(f, F.col(f"_ms.{f}"))
-    return df.drop("_ms")
-
-
 # ---------------------------------------------------------------------------
-# Stage 3: verdict
+# Verdict
 # ---------------------------------------------------------------------------
 
 def with_verdict(df: DataFrame) -> DataFrame:
@@ -221,17 +193,6 @@ def with_verdict(df: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Stage 4: scrub
-# ---------------------------------------------------------------------------
-
-def with_scrub(df: DataFrame, udfs: dict) -> DataFrame:
-    df = df.withColumn("_sc", udfs["scrub"](F.col("etext")))
-    return (df.withColumn("scrubbed_text", F.col("_sc.scrubbed_text"))
-              .withColumn("scrub_edits", F.col("_sc.scrub_edits"))
-              .drop("_sc"))
-
-
-# ---------------------------------------------------------------------------
 # Partitioning / skew helpers
 # ---------------------------------------------------------------------------
 
@@ -282,27 +243,20 @@ class PipelineOutput:
 
 
 def run_quality_filter(spark: SparkSession, pages: DataFrame,
-                       udfs: dict | None = None,
-                       parallelism: int | None = None) -> PipelineOutput:
+                       udfs: dict | None = None) -> PipelineOutput:
     """Build the full lazy DAG. No actions are triggered here.
 
-    ``parallelism``: optional explicit fan-out before the model stage —
-    a LAST RESORT for inputs that genuinely cannot yield enough scan
-    splits (one giant unsplittable file). The repartition shuffles the
-    raw html+text bytes and measured 2.2× slower than scan-fed
-    execution on a 1M-page input (133s vs 59s at 16 cores). The right
-    fix when the input is splittable is a smaller
-    spark.sql.files.maxPartitionBytes (the UDF costs ~ms/doc of CPU,
-    so byte-based 128 MB splits under-fan the scan); leave this None.
+    ``udfs`` is a ``make_udfs(spark)`` result, passed in to reuse its
+    broadcast models across calls; None trains them here. The UDF
+    stage runs at the scan's parallelism: an input that yields too few
+    splits wants a smaller ``spark.sql.files.maxPartitionBytes``, not a
+    repartition of the raw html+text bytes (measured 2.2× slower on a
+    1M-page input, 133 s vs 59 s at 16 cores).
     """
     udfs = udfs or make_udfs(spark)
-    if parallelism:
-        pages = pages.repartition(parallelism)
     # ONE Python eval node for the whole pipeline (extract + langid +
     # perplexity + repetition + scrub): workers == tasks, one Arrow
-    # round trip per batch. The staged variants (with_extracted_text →
-    # with_model_signals → with_scrub) compute identical values and
-    # remain for per-stage tests; this fused path is the hot one.
+    # round trip per batch.
     payload = F.coalesce(F.col("html"),
                          F.encode(F.coalesce(F.col("text"), F.lit("")),
                                   "UTF-8"))
@@ -316,7 +270,7 @@ def run_quality_filter(spark: SparkSession, pages: DataFrame,
     #     byte-equals `text` — coalesced natively, zero copy);
     #   * scrubbed_text rides as a mostly-null `_scrub_opt` column
     #     (non-null only when the scrubber edited) and is coalesced
-    #     against etext AFTER the window.
+    #     against etext AFTER the verdict's aggregate+join.
     df = df.select(
         "url", "warc_ts", "lang",
         F.coalesce(F.col("_p.etext"), F.col("text"), F.lit(""))

@@ -115,13 +115,12 @@ def run(spark: SparkSession, pages: DataFrame, warehouse: str,
         lin = lineage_rows(verdicts, run_id, STAGE)
         catalog.append(lin, "lineage")
 
-        n_in = verdicts.count()
-        n_kept = kept.count()
         counters = dict(obs.get)
     finally:
         verdicts.unpersist()
     return {"run_id": run_id, "dates_processed": n_dates,
-            "rows_in": n_in, "rows_kept": n_kept, "resumed": False,
+            "rows_in": counters["docs_scanned"],
+            "rows_kept": counters["docs_kept"], "resumed": False,
             "observed": counters,
             "schema_presence": float(schema_row.score)}
 

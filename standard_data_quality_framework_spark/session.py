@@ -35,25 +35,28 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        # Byte-bound Arrow batches (Spark 4 knob): multi-KB text rows
-        # would otherwise ship ~40 MB batches (10k records) through
-        # the pandas-UDF workers — measured on the 600k-page pipeline
-        # at 32 cores, clamping to 8 MB (~2k text rows/batch) cut the
-        # median ~10% and removed a 2-3× long-tail of memory-spike
-        # runs, while narrow numeric Arrow traffic (embeddings etc.)
-        # stays at the 10k-record bound. Row-size-dependent, not
-        # data-size-dependent — the same clamp is correct at 100 TB.
+        # Byte-bound the Arrow batches that pandas UDFs and
+        # applyInPandas exchange with Python workers (Spark 4 knob;
+        # createDataFrame/toPandas batching ignores it): multi-KB
+        # text rows would otherwise ship ~40 MB batches (10k records)
+        # to the process_page workers — measured on the 600k-page
+        # pipeline at 32 cores, clamping to 8 MB (~2k text rows/batch)
+        # cut the median ~10% and removed a 2-3× long-tail of memory-
+        # spike runs, while narrow numeric UDF traffic (embedding
+        # verify) stays at the 10k-record bound. Row-size-dependent,
+        # not data-size-dependent.
         .config("spark.sql.execution.arrow.maxBytesPerBatch", "8388608")
         .config("spark.driver.memory", os.environ.get("SDQF_DRIVER_MEM", "16g"))
-        # the unrolled vector math (similarity._dot) generates Java
-        # methods past HotSpot's 8000-bytecode JIT refusal threshold
-        # (-XX:DontCompileHugeMethods default); without this flag those
-        # methods run in the BYTECODE INTERPRETER — measured 2× slower
-        # than the lambda forms they replaced, and 5× faster once
-        # JIT-compiled. Standard practice for codegen-heavy Spark
-        # (wide schemas hit the same cliff); on a cluster the same
-        # flag goes in spark.executor.extraJavaOptions too (local mode
-        # has one JVM, so driver covers both roles here).
+        # JIT flags, kept by measurement: HotSpot leaves methods over
+        # 8000 bytecodes in the interpreter by default, and Spark's
+        # generated code can exceed that. A/B on a 4-core VM, 5
+        # interleaved perfbench pairs per workload, medians with vs
+        # without the flags: filter_batch run_s 15.6 s vs 16.4 s and
+        # setup_s 8.1 s vs 8.8 s (flags faster in 5 of 5 pairs);
+        # ingest_day run_s 24.0 s vs 24.7 s, setup_s level (8.1 s vs
+        # 8.0 s). The run_s gaps sit inside the run-to-run spread. The
+        # executor setting matters on a cluster; in local mode one JVM
+        # runs the tasks.
         .config("spark.driver.extraJavaOptions",
                 "-XX:-DontCompileHugeMethods "
                 "-XX:ReservedCodeCacheSize=512m")

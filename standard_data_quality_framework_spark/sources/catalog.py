@@ -1,27 +1,18 @@
-"""Table-catalog abstraction: Iceberg when the runtime jar is present,
-a functionally equivalent Hive-partitioned-parquet fallback otherwise.
+"""Partitioned-parquet table catalog — the warehouse layer of the runner.
 
-The pipeline code only ever talks to the abstraction, so the Iceberg
-path is configuration, not code:
-
-  * ``IcebergCatalog`` issues ``writeTo(tbl).append()`` /
-    ``overwritePartitions()`` against a configured Spark catalog
-    (requires iceberg-spark-runtime on the classpath — not available
-    in this sandbox, gated behind a capability probe).
-  * ``ParquetCatalog`` provides the same commit semantics on plain
-    parquet: partitioned layout (``warc_date=.../``), an append-only
-    lineage table via unique-file append (parquet part files with a
-    run-scoped name → atomic visibility on rename-capable
-    filesystems), and idempotent per-partition overwrite via Spark's
-    dynamic partitionOverwriteMode — used for pages_filtered AND the
-    metrics/dropped_by_rule tables (keyed by stage × partition_key) so
-    crash replays replace rather than double-count.
+``ParquetCatalog`` gives the runner its commit semantics on plain
+parquet: partitioned layout (``warc_date=.../``), an append-only
+lineage table via unique-file append (parquet part files with a
+run-scoped name → atomic visibility on rename-capable filesystems),
+and idempotent per-partition overwrite via Spark's dynamic
+partitionOverwriteMode — used for pages_filtered AND the
+metrics/dropped_by_rule tables (keyed by stage × partition_key) so
+crash replays replace rather than double-count.
 """
 
 from __future__ import annotations
 
 import os
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -63,44 +54,3 @@ class ParquetCatalog:
          .option("partitionOverwriteMode", "dynamic")
          .partitionBy(*partition_by)
          .parquet(self.path(table)))
-
-
-class IcebergCatalog:
-    """Real Iceberg tables — used verbatim when the runtime jar is on
-    the classpath (spark.jars.packages=org.apache.iceberg:iceberg-spark-
-    runtime-…). Partition transforms: days(warc_ts), bucket(N, url)."""
-
-    def __init__(self, spark: SparkSession, catalog: str = "sdqf"):
-        self.spark = spark
-        self.catalog = catalog
-
-    def _t(self, table: str) -> str:
-        return f"{self.catalog}.{table}"
-
-    def exists(self, table: str) -> bool:
-        return self.spark.catalog.tableExists(self._t(table))
-
-    def read(self, table: str) -> DataFrame:
-        return self.spark.table(self._t(table))
-
-    def append(self, df: DataFrame, table: str,
-               partition_by: list[str] | None = None) -> None:
-        df.writeTo(self._t(table)).append()
-
-    def overwrite_partitions(self, df: DataFrame, table: str,
-                             partition_by: list[str]) -> None:
-        df.writeTo(self._t(table)).overwritePartitions()
-
-
-def iceberg_available(spark: SparkSession) -> bool:
-    try:
-        spark._jvm.org.apache.iceberg.Schema  # noqa: SLF001
-        return True
-    except Exception:
-        return False
-
-
-def get_catalog(spark: SparkSession, warehouse: str):
-    if iceberg_available(spark):  # pragma: no cover - no jar in sandbox
-        return IcebergCatalog(spark)
-    return ParquetCatalog(spark, warehouse)

@@ -1005,21 +1005,32 @@ def test_grouped_quantiles_exact_matches_per_alias(spark):
     assert (got == want).all().all()
 
 
-def test_embedding_verify_arrow_native_parity(spark):
-    # r6: the per-bucket numpy verify must be BIT-identical to the
-    # native expression path (fold order + HALF_UP rounding replicated)
-    import numpy as np
+def test_embedding_verify_matches_spark_round(spark):
+    # the per-bucket numpy verify must be BIT-identical to Spark's own
+    # round(cos, 4) over the fold-lambda dot/norms (fold order + HALF_UP
+    # rounding replicated); the reference is a cross join written here
+    from standard_data_quality_framework_spark.operators.similarity import (
+        _dot, _sqnorm)
     rng = np.random.default_rng(11)
     vecs = rng.standard_normal((2600, 16)).astype(np.float32)
     rows = [(i, [float(x) for x in vecs[i]]) for i in range(len(vecs))]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    kw = dict(threshold=0.5, n_planes=2, dim=16, n_tables=2)
-    arrow = dedup.embedding_neardup_pairs(
-        df, "vec_id", "embedding", verify_impl="arrow", **kw).toPandas()
-    native = dedup.embedding_neardup_pairs(
-        df, "vec_id", "embedding", verify_impl="native", **kw).toPandas()
-    a = arrow.sort_values(["id_a", "id_b"]).reset_index(drop=True)
-    b = native.sort_values(["id_a", "id_b"]).reset_index(drop=True)
+    got = dedup.embedding_neardup_pairs(
+        df, "vec_id", "embedding", threshold=0.5, n_planes=0,
+        allow_exact=True).toPandas()
+    v = df.select(F.col("vec_id"),
+                  F.col("embedding").cast("array<double>").alias("v"))
+    va, vb = F.col("a.v"), F.col("b.v")
+    cos = F.round(_dot(va, vb) / (F.sqrt(_sqnorm(va))
+                                  * F.sqrt(_sqnorm(vb))), 4)
+    want = (v.alias("a").crossJoin(v.alias("b"))
+            .filter(F.col("a.vec_id") < F.col("b.vec_id"))
+            .select(F.col("a.vec_id").alias("id_a"),
+                    F.col("b.vec_id").alias("id_b"),
+                    cos.alias("cos_sim"))
+            .filter(F.col("cos_sim") >= 0.5)).toPandas()
+    a = got.sort_values(["id_a", "id_b"]).reset_index(drop=True)
+    b = want.sort_values(["id_a", "id_b"]).reset_index(drop=True)
     assert len(a) == len(b) and len(a) > 100
     assert (a["id_a"] == b["id_a"]).all()
     assert (a["id_b"] == b["id_b"]).all()

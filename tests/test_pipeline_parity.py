@@ -88,10 +88,10 @@ def test_f1_and_class_mix(result, gold):
 
 def test_determinism_across_parallelism(spark, pages_df):
     """SURVEY §5.5: identical verdicts under different partitioning."""
-    a = run_quality_filter(spark, pages_df, parallelism=3).verdicts \
+    a = run_quality_filter(spark, pages_df.repartition(3)).verdicts \
         .select("url", "keep", "drop_reasons", "scrubbed_text") \
         .toPandas().sort_values("url").reset_index(drop=True)
-    b = run_quality_filter(spark, pages_df, parallelism=13).verdicts \
+    b = run_quality_filter(spark, pages_df.repartition(13)).verdicts \
         .select("url", "keep", "drop_reasons", "scrubbed_text") \
         .toPandas().sort_values("url").reset_index(drop=True)
     assert (a["url"] == b["url"]).all()
@@ -99,28 +99,3 @@ def test_determinism_across_parallelism(spark, pages_df):
     assert (a["scrubbed_text"] == b["scrubbed_text"]).all()
     assert all(list(x) == list(y)
                for x, y in zip(a["drop_reasons"], b["drop_reasons"]))
-
-
-def test_staged_api_matches_fused(spark, pages_df):
-    """The per-stage functions (with_extracted_text → with_native_signals
-    → with_model_signals → with_scrub) must agree with the fused
-    process_page path used by run_quality_filter."""
-    from standard_data_quality_framework_spark.functions.udfs import (
-        make_udfs)
-    from standard_data_quality_framework_spark.pipeline import (
-        with_extracted_text, with_model_signals, with_native_signals,
-        with_scrub, with_verdict)
-    sample = pages_df.limit(80)
-    udfs = make_udfs(spark)
-    staged = with_scrub(
-        with_verdict(with_model_signals(
-            with_native_signals(with_extracted_text(sample, udfs)), udfs)),
-        udfs)
-    cols = ["url", "etext", "lang_pred", "perplexity", "dup_line_frac",
-            "scrubbed_text", "scrub_edits", "keep"]
-    a = staged.select(*cols).toPandas().sort_values("url") \
-        .reset_index(drop=True)
-    b = run_quality_filter(spark, sample, udfs=udfs).verdicts \
-        .select(*cols).toPandas().sort_values("url").reset_index(drop=True)
-    for c in cols:
-        assert (a[c] == b[c]).all() or (a[c].equals(b[c])), c

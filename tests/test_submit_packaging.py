@@ -64,6 +64,7 @@ def test_spark_submit_main_local_smoke():
     obs = summary["observed"]
     assert obs["docs_scanned"] == 300, summary
     assert 0 < obs["docs_kept"] < 300, summary
+    assert summary.get("rows_kept") == obs["docs_kept"], summary
     # warehouse artifacts exist and are readable parquet
     n = duckdb.sql(
         f"select count(*) from '{wh}/pages_filtered/**/*.parquet'"
