@@ -14,13 +14,6 @@ reference's accuracy/completeness checks — quality_checks.py:77-133,
 
 from __future__ import annotations
 
-# --- tokenization contract -------------------------------------------------
-# Tokens are maximal runs of non-whitespace, where "whitespace" is the
-# ASCII class [ \t\n\x0B\f\r] — identical semantics for Java regex \s
-# (Spark split) and the Python reference labeler. Fixture text is ASCII-
-# whitespace only, so Python str.split() agrees.
-TOKEN_SPLIT_RE = r"\s+"
-
 # --- heuristic rule thresholds (C4/Gopher-style) ---------------------------
 RULES: dict[str, float] = {
     "min_words": 20,            # Gopher: drop docs with too few words

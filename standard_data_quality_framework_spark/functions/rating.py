@@ -6,7 +6,7 @@ Reproduces exactly:
     (closed UPPER boundaries — 0.4 rates 2, not 3).
   - UC1 piecewise SDQF rating, both orientations
     (/root/reference/src/uc1_image_quality_checks.py:410-419 higher-is-
-    better; :488-496 lower-is-better), then normalized (rating−1)/4.
+    better; :488-496 lower-is-better).
 """
 
 from __future__ import annotations
@@ -50,8 +50,3 @@ def piecewise_rating_lower_better(err: Column) -> Column:
     )
     return F.least(F.greatest(r, F.lit(1.0)), F.lit(5.0))
 
-
-def normalized_score(rating: Column) -> Column:
-    """(rating−1)/4 — UC1 normalization (uc1:419) and the qualitative
-    normalization (app.py:496)."""
-    return (rating - F.lit(1.0)) / F.lit(4.0)

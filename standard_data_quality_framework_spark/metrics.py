@@ -6,7 +6,7 @@ Reference parity:
   * score→rating bucketing of /root/reference/src/rating.py:4-27
   * overall = mean of per-dimension ratings (/root/reference/src/rating.py:49-54)
 
-Formulas (per partition group, default per warc_date):
+Formulas (per partition group = warc_date):
   completeness      = non-missing cells / total cells over
                       (url, warc_ts, text, lang)        [A7]
   accuracy          = docs passing all range rules / docs [A8]
@@ -16,9 +16,10 @@ Formulas (per partition group, default per warc_date):
   pop_representativity = 1 − Σ_c |p_c − 1/k| / (2(1−1/k)) over lang_pred [A3]
   metadata_granularity = docs with (url, warc_ts, lang) all present / docs [A16]
 
-Everything is ONE hash aggregation per group (+ one small groupBy for
-representativity) — map-side partial aggregation applies, no skew
-(dates are the partition key).
+Everything is ONE hash aggregation per group (+ one small per-class
+count collected into one array per group for representativity) —
+map-side partial aggregation applies, no skew (dates are the
+partition key).
 """
 
 from __future__ import annotations
@@ -40,8 +41,11 @@ def _flag(c) -> F.Column:
 _META_COLS = ["url", "warc_ts", "text", "lang"]
 
 
-def dimension_metrics(verdicts: DataFrame,
-                      group_col: str = "warc_date") -> DataFrame:
+def _partition_key() -> F.Column:
+    return F.col("warc_date").cast("string").alias("partition_key")
+
+
+def dimension_metrics(verdicts: DataFrame) -> DataFrame:
     """Long-format metrics: one row per (group, dimension) + overall.
 
     Output: (partition_key string, dimension string, score double,
@@ -56,7 +60,7 @@ def dimension_metrics(verdicts: DataFrame,
     (uc4_tabular_quality_checks.py:193-291), and the raw counters
     behind each ratio score.
     """
-    g = F.col(group_col).cast("string").alias("partition_key")
+    g = _partition_key()
     # ONE coherence predicate shared by the score and its detail
     # counter (null etext → not coherent on BOTH sides; a bare
     # `length(etext) > 0` is null for null etext, which _flag would
@@ -69,6 +73,9 @@ def dimension_metrics(verdicts: DataFrame,
         "text": F.col("etext").isNotNull() & (F.length("etext") > 0),
         "lang": F.col("lang").isNotNull() & (F.length("lang") > 0),
     }
+    # ONE metadata predicate shared by the score and its counter
+    meta_ok = (F.col("url").isNotNull() & F.col("warc_ts").isNotNull()
+               & presence["lang"])
     base = verdicts.groupBy(g).agg(
         F.count("*").alias("docs_scanned"),
         F.sum(_flag(~F.col("keep"))).alias("docs_dropped"),
@@ -85,10 +92,7 @@ def dimension_metrics(verdicts: DataFrame,
         .alias("semantic_coherence"),
         (F.count_distinct("url") / F.count("*"))
         .alias("relational_consistency"),
-        (F.sum(_flag(F.col("url").isNotNull()
-                     & F.col("warc_ts").isNotNull()
-                     & F.col("lang").isNotNull()
-                     & (F.length("lang") > 0))) / F.count("*"))
+        (F.sum(_flag(meta_ok)) / F.count("*"))
         .alias("metadata_granularity"),
         # detail counters (one pass — same aggregation, more columns)
         *[F.sum(_flag(~p)).alias(f"_missing_{c}")
@@ -99,61 +103,54 @@ def dimension_metrics(verdicts: DataFrame,
         .alias("_n_exact_dup"),
         F.sum(_flag(~coherent)).alias("_n_bad_decode"),
         F.count_distinct("url").alias("_n_distinct_urls"),
-        F.sum(_flag(F.col("url").isNotNull()
-                    & F.col("warc_ts").isNotNull()
-                    & F.col("lang").isNotNull()
-                    & (F.length("lang") > 0))).alias("_n_meta_ok"),
+        F.sum(_flag(meta_ok)).alias("_n_meta_ok"),
     )
 
     # population representativity (A3, total-deviation) over lang_pred
     # — nulls dropped BEFORE counting classes, matching the reference's
     # remove-NA step (quality_checks.py valid_data): null is missing
-    # data (a completeness problem), not a population class
-    counts = (verdicts.filter(F.col("lang_pred").isNotNull())
-              .groupBy(g, "lang_pred")
-              .agg(F.count("*").alias("n")))
-    rep = counts.groupBy("partition_key").agg(
-        F.count("*").alias("k"),
-        F.sum("n").alias("total"),
-    )
-    dev = (counts
-           .join(rep.select("partition_key", "k", "total"), "partition_key")
-           .groupBy("partition_key", "k")
-           .agg(F.sum(F.abs(F.col("n") / F.col("total")
-                            - 1.0 / F.col("k"))).alias("total_dev")))
-    # k<=1 → 0.0: reference parity (quality_checks.py:25-29, single
-    # class is maximally unrepresentative)
-    rep_score = dev.select(
+    # data (a completeness problem), not a population class. One row
+    # per group holds its classes as a class-sorted array of
+    # (lang_pred, n); k, total, the deviation and the details map are
+    # folded from it, so the deviation sums in class order, not in
+    # arrival order.
+    cls = (verdicts.filter(F.col("lang_pred").isNotNull())
+           .groupBy(g, "lang_pred")
+           .agg(F.count("*").alias("n"))
+           .groupBy("partition_key")
+           .agg(F.array_sort(F.collect_list(F.struct("lang_pred", "n")))
+                .alias("_cls"))
+           .select("partition_key", "_cls", F.size("_cls").alias("k"),
+                   F.aggregate("_cls", F.lit(0).cast("long"),
+                               lambda acc, x: acc + x["n"]).alias("total")))
+    k, total = F.col("k"), F.col("total")
+    total_dev = F.aggregate(
+        "_cls", F.lit(0.0),
+        lambda acc, x: acc + F.abs(x["n"] / total - 1.0 / k))
+    rep = cls.select(
         "partition_key",
-        F.when(F.col("k") <= 1, F.lit(0.0)).otherwise(
-            F.lit(1.0) - F.col("total_dev")
-            / (2.0 * (1.0 - 1.0 / F.col("k"))))
-        .alias("population_representativity"))
+        # k<=1 → 0.0: reference parity (quality_checks.py:25-29, single
+        # class is maximally unrepresentative)
+        F.when(k <= 1, F.lit(0.0)).otherwise(
+            F.lit(1.0) - total_dev / (2.0 * (1.0 - 1.0 / k)))
+        .alias("population_representativity"),
+        # per-class proportion map (uc4:193-291 per-class details),
+        # entries in class order for a deterministic layout
+        F.map_from_entries(F.transform("_cls", lambda x: F.struct(
+            x["lang_pred"].alias("key"),
+            F.round(x["n"] / total, 6).cast("string").alias("value"))))
+        .alias("_rep_details"))
 
-    # per-class proportion map (uc4:193-291 per-class details) — the
-    # map entries are sorted by class for a deterministic layout
-    rep_details = (counts
-                   .join(rep.select("partition_key", "total"),
-                         "partition_key")
-                   .groupBy("partition_key")
-                   .agg(F.map_from_entries(F.array_sort(F.collect_list(
-                       F.struct(
-                           F.col("lang_pred").alias("key"),
-                           F.round(F.col("n") / F.col("total"), 6)
-                           .cast("string").alias("value")))))
-                       .alias("_rep_details")))
-
-    # a group whose lang_pred is ALL null has no rep rows at all —
+    # a group whose lang_pred is ALL null has no rep row at all —
     # score 0.0 (nothing representable), empty details
-    _empty_details = F.map_from_entries(
+    empty_map = F.map_from_entries(
         F.array().cast("array<struct<key:string,value:string>>"))
-    wide = (base.join(rep_score, "partition_key", "left")
-            .join(rep_details, "partition_key", "left")
+    wide = (base.join(rep, "partition_key", "left")
             .withColumn("population_representativity",
                         F.coalesce("population_representativity",
                                    F.lit(0.0)))
             .withColumn("_rep_details",
-                        F.coalesce("_rep_details", _empty_details)))
+                        F.coalesce("_rep_details", empty_map)))
 
     def _m(*pairs) -> F.Column:
         kv = []
@@ -175,8 +172,6 @@ def dimension_metrics(verdicts: DataFrame,
         "metadata_granularity": _m(("meta_complete_docs",
                                     F.col("_n_meta_ok"))),
     }
-    empty_map = F.map_from_entries(
-        F.array().cast("array<struct<key:string,value:string>>"))
 
     # ONE wide row per group → explode into the long format. (A union
     # of per-dimension selects re-aggregates the verdicts frame once
@@ -222,21 +217,19 @@ def dimension_metrics(verdicts: DataFrame,
                     F.col("e.details").alias("details")))
 
 
-def dropped_by_rule(verdicts: DataFrame,
-                    group_col: str = "warc_date") -> DataFrame:
+def dropped_by_rule(verdicts: DataFrame) -> DataFrame:
     """(partition_key, rule, n_dropped) — per-rule drop counts."""
     return (verdicts
-            .select(F.col(group_col).cast("string").alias("partition_key"),
+            .select(_partition_key(),
                     F.explode("drop_reasons").alias("rule"))
             .groupBy("partition_key", "rule")
             .agg(F.count("*").alias("n_dropped")))
 
 
-def lineage_rows(verdicts: DataFrame, run_id: str, stage: str,
-                 group_col: str = "warc_date") -> DataFrame:
+def lineage_rows(verdicts: DataFrame, run_id: str,
+                 stage: str) -> DataFrame:
     """Per-partition lineage bookkeeping for checkpoint/resume."""
-    return (verdicts.groupBy(
-        F.col(group_col).cast("string").alias("partition_key"))
+    return (verdicts.groupBy(_partition_key())
         .agg(F.count("*").alias("rows_in"),
              F.sum(F.when(F.col("keep"), 1).otherwise(0)).alias("rows_out"))
         .select(F.lit(run_id).alias("run_id"), F.lit(stage).alias("stage"),

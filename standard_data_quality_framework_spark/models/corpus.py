@@ -58,10 +58,6 @@ def gen_sentence(lang: str, rng: random.Random, min_w: int = 6,
     return " ".join(out)
 
 
-def gen_paragraph(lang: str, rng: random.Random, n_sentences: int) -> str:
-    return " ".join(gen_sentence(lang, rng) for _ in range(n_sentences))
-
-
 def seed_corpus(lang: str, n_sentences: int = 400,
                 seed: str = "seed-corpus") -> list[str]:
     """Deterministic training corpus for the model builders."""

@@ -317,10 +317,11 @@ def simhash_exploded(df: DataFrame, id_col: str, text_col: str,
     word hashes, via the EXPLODED shape: explode words → explode bit
     positions → conditional sum per bit → assemble. Whole-stage
     codegen throughout, but shuffles 32 rows per distinct token.
-    Measured LOSER of the r4 task #7 A/B (BENCH/simhash_rowfold_ab.json:
-    33.1/7.3 s vs 22.9/5.2 s for the row-fold in matched slots at 80k
-    docs, 32 cores) — kept as the documented alternative for CPU-bound
-    clusters where interpreter cost dominates shuffle cost."""
+    Measured LOSER of the A/B against the row-fold (sf0.1 documents
+    ×16 = 80k docs, 32 cores, two rounds in alternating order):
+    33.1 s and 7.3 s exploded vs 22.9 s and 5.2 s row-fold — kept as
+    the documented alternative for CPU-bound clusters where
+    interpreter cost dominates shuffle cost."""
     toks = (df.select(F.col(id_col).alias("id"),
                       F.explode(F.split(F.trim(F.col(text_col)),
                                         r"\s+")).alias("w"))
@@ -455,9 +456,12 @@ def simhash_pairs(df: DataFrame, id_col: str, text_col: str,
 
 def connected_components(nodes: DataFrame, edges: DataFrame,
                          max_iter: int = 25) -> DataFrame:
-    """(id, label) — label = min node id reachable through ``edges``
-    (columns id_a/id_b), i.e. the canonical member of each duplicate
-    cluster.
+    """(id, label) for every id in ``nodes`` — label = min node id
+    reachable through ``edges`` (columns id_a/id_b, both ends in
+    ``nodes``), i.e. the canonical member of each duplicate cluster.
+    Propagation runs over the edge-incident ids only (the duplicate
+    subgraph); every other id keeps label = id through the final left
+    join, so at 10^12 docs the iterative frame stays dup-subgraph-sized.
 
     Min-label propagation: each round every node adopts the minimum of
     its own and its neighbours' labels — converges in O(component
@@ -471,16 +475,19 @@ def connected_components(nodes: DataFrame, edges: DataFrame,
     ``duplicated()`` global scan (quality_checks.py:245-275) at sizes
     where the dataset does not fit one machine.
     """
-    labels = (nodes.select(F.col("id"), F.col("id").alias("label"))
-              .localCheckpoint())
-    # materialize the edge list ONCE — every propagation round joins
-    # it, and without this each round would replay the (potentially
-    # expensive) pair-generation plan that produced the edges
-    sym = (edges.select(F.col("id_a").alias("src"),
-                        F.col("id_b").alias("dst"))
-           .unionByName(edges.select(F.col("id_b").alias("src"),
-                                     F.col("id_a").alias("dst")))
-           .localCheckpoint())
+    # the symmetric edge list in ONE pass over the edge plan (explode
+    # both directions of each row), materialized once: the seed labels
+    # and every propagation round read this checkpoint, never the
+    # (potentially expensive) pair-generation plan that produced it
+    sym = (edges.select(F.explode(F.array(
+        F.struct(F.col("id_a").alias("src"), F.col("id_b").alias("dst")),
+        F.struct(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))))
+        .alias("e"))
+        .select("e.src", "e.dst")
+        .localCheckpoint())
+    labels = (sym.select(F.col("src").alias("id"),
+                         F.col("src").alias("label"))
+              .distinct().localCheckpoint())
     from pyspark.sql import Observation
     for i in range(max_iter):
         neigh = (sym.join(labels, sym.dst == labels.id)
@@ -500,7 +507,6 @@ def connected_components(nodes: DataFrame, edges: DataFrame,
                .select("id", "label")
                .localCheckpoint())
         changed = int(obs.get["chg"] or 0)
-        labels.unpersist()
         labels = new
         if changed == 0:
             break
@@ -514,8 +520,11 @@ def connected_components(nodes: DataFrame, edges: DataFrame,
             f"iterations ({changed} labels still changing); labels are "
             "PARTIAL — raise max_iter for graphs with diameter > "
             f"{max_iter}", RuntimeWarning, stacklevel=2)
-    sym.unpersist()
-    return labels
+    # NOTE: sym and the per-round labels are localCheckpoint'ed
+    # (RDD-level persistence; Dataset.unpersist is a no-op on them) —
+    # the ContextCleaner reclaims their blocks once unreferenced.
+    return (nodes.join(labels, "id", "left")
+            .select("id", F.coalesce("label", "id").alias("label")))
 
 
 # ---------------------------------------------------------------------------
@@ -693,9 +702,7 @@ def template_clusters(df: DataFrame, id_col: str, text_col: str,
     cap (the analogue of ngram_jaccard_pairs' stop-shingle cut): one
     site-wide footer fingerprint on 10^6 pages would alone emit
     ~5·10^11 join rows, while true template pages share MANY
-    fingerprints and stay connected through the sub-cap ones. The CC
-    pass runs over edge-incident nodes only (the template subgraph),
-    mirroring runner._labels_for.
+    fingerprints and stay connected through the sub-cap ones.
     """
     from .textstats import winnowing_fingerprints
     fps = winnowing_fingerprints(df, id_col, text_col, k=k, w=w)
@@ -709,24 +716,16 @@ def template_clusters(df: DataFrame, id_col: str, text_col: str,
     else:
         fps = fps.repartition("fp")
     a, b = fps.alias("a"), fps.alias("b")
-    # edges feed TWO consumers (incident-node derivation and the CC
-    # propagation loop): materialize the join once — without this the
-    # fp self-join executes twice
     edges = (a.join(b, (F.col("a.fp") == F.col("b.fp"))
                     & (F.col("a.id") < F.col("b.id")))
              .groupBy(F.col("a.id").alias("id_a"),
                       F.col("b.id").alias("id_b"))
              .agg(F.count("*").alias("shared_fps"))
              .filter(F.col("shared_fps") >= min_shared)
-             .select("id_a", "id_b")
-             .localCheckpoint())
-    incident = (edges.select(F.col("id_a").alias("id"))
-                .unionByName(edges.select(F.col("id_b").alias("id")))
-                .distinct())
-    labels = connected_components(incident, edges)
+             .select("id_a", "id_b"))
     all_ids = df.select(F.col(id_col).alias("id")).distinct()
-    lab = (all_ids.join(labels, "id", "left")
-           .select("id", F.coalesce("label", "id").alias("cluster_id")))
+    lab = connected_components(all_ids, edges).withColumnRenamed(
+        "label", "cluster_id")
     csize = (lab.groupBy("cluster_id")
              .agg(F.count("*").alias("cluster_size")))
     return lab.join(csize, "cluster_id").select(

@@ -1841,7 +1841,7 @@ def metrics_details_q(spark, sf_dir):
         F.lit(0).alias("scrub_edits"),
         F.array().cast("array<string>").alias("drop_reasons"),
         F.lit("2024-01-01").alias("warc_date"))
-    mets = dimension_metrics(v, "warc_date")
+    mets = dimension_metrics(v)
     return (mets.filter(F.col("dimension").isin(
         "completeness", "population_representativity"))
         .select("partition_key", "dimension",

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .metrics import dimension_metrics, dropped_by_rule, lineage_rows
+from .operators.dedup import connected_components
 from .pipeline import run_quality_filter, with_partition_cols
 from .sources.catalog import ParquetCatalog
 
@@ -55,22 +56,21 @@ def run(spark: SparkSession, pages: DataFrame, warehouse: str,
     run_id = run_id or uuid.uuid4().hex[:12]
     catalog = ParquetCatalog(spark, warehouse)
 
-    # scored schema-presence check against the use-case contract
-    # (config.EXPECTED_PAGE_COLUMNS) — plan-time, no data pass
-    from .config import EXPECTED_PAGE_COLUMNS
-    from .operators.quality import expected_columns_presence
-    schema_row = expected_columns_presence(
-        pages, EXPECTED_PAGE_COLUMNS).first()
-    if schema_row.score < 1.0:
+    # schema-presence check against the use-case contract
+    # (config.EXPECTED_PAGE_COLUMNS) — a set difference, no Spark job
+    from .config import EXPECTED_PAGE_COLUMNS as expected
+    have = set(pages.columns)
+    missing = [c for c in expected if c not in have]
+    if missing:
         raise ValueError(
-            f"input is missing expected columns: {schema_row.missing_cols} "
-            f"(schema presence {schema_row.score})")
+            f"input is missing expected columns: {','.join(missing)} "
+            f"(schema presence {round(1 - len(missing) / len(expected), 6)})")
 
     todo = pending_dates(catalog, pages)
     n_dates = todo.count()
     if n_dates == 0:
         return {"run_id": run_id, "dates_processed": 0, "resumed": True,
-                "schema_presence": float(schema_row.score)}
+                "schema_presence": 1.0}
 
     # restrict input to pending partitions (broadcast the small date set
     # — partition pruning at the scan on a real Iceberg table)
@@ -122,7 +122,7 @@ def run(spark: SparkSession, pages: DataFrame, warehouse: str,
             "rows_in": counters["docs_scanned"],
             "rows_kept": counters["docs_kept"], "resumed": False,
             "observed": counters,
-            "schema_presence": float(schema_row.score)}
+            "schema_presence": 1.0}
 
 
 def _neardup_edges(docs: DataFrame, n: int, num_hashes: int, bands: int,
@@ -149,23 +149,8 @@ def _neardup_edges(docs: DataFrame, n: int, num_hashes: int, bands: int,
     return lsh.unionByName(exact).distinct()
 
 
-def _labels_for(all_ids: DataFrame, edges: DataFrame) -> DataFrame:
-    """(id, label) for EVERY id in all_ids: connected components run
-    over edge-incident nodes only (the duplicate subgraph — small),
-    singletons keep label = id via the left join. At 10^12 docs this
-    bounds the iterative CC frame to the dup subgraph instead of the
-    whole corpus."""
-    from .operators.dedup import connected_components
-    incident = (edges.select(F.col("id_a").alias("id"))
-                .unionByName(edges.select(F.col("id_b").alias("id")))
-                .distinct())
-    labels = connected_components(incident, edges)
-    # NOTE: labels is localCheckpoint'ed (RDD-level persistence);
-    # Dataset.unpersist would be a no-op. The checkpoint blocks are
-    # reclaimed by the ContextCleaner once the frame is unreferenced
-    # after the dup_clusters write.
-    return (all_ids.join(labels, "id", "left")
-            .select("id", F.coalesce("label", "id").alias("label")))
+# perfbench/trace.py times the CC layer under this name
+_labels_for = connected_components
 
 
 def run_global_dedup(spark: SparkSession, warehouse: str,
@@ -231,22 +216,22 @@ def run_global_dedup(spark: SparkSession, warehouse: str,
     catalog = ParquetCatalog(spark, warehouse)
     pages = catalog.read("pages_filtered")
 
-    # day set = the snapshot identity; one tiny row per day (partition
-    # listing on a real Iceberg table), not a data collect
-    days = sorted(str(r[0]) for r in
-                  pages.select("warc_date").distinct().collect())
-    snap = hashlib.md5(",".join(days).encode()).hexdigest()[:16]
+    def _snapshot(frame: DataFrame) -> tuple[list[str], str]:
+        # (sorted day set, its md5) — one tiny row per day, not a data
+        # collect (a partition listing on a real Iceberg table)
+        days = sorted(str(r[0]) for r in
+                      frame.select("warc_date").distinct().collect())
+        return days, hashlib.md5(",".join(days).encode()).hexdigest()[:16]
 
-    def _lineage_done(key: str) -> bool:
-        if not catalog.exists("lineage"):
-            return False
-        return (catalog.read("lineage")
+    # day set = the snapshot identity
+    days, snap = _snapshot(pages)
+    done = set()
+    if catalog.exists("lineage"):
+        done = {r[0] for r in catalog.read("lineage")
                 .filter((F.col("stage") == GLOBAL_DEDUP_STAGE)
-                        & (F.col("status") == "done")
-                        & (F.col("partition_key") == key))
-                .count()) > 0
-
-    if _lineage_done(snap):
+                        & (F.col("status") == "done"))
+                .select("partition_key").distinct().collect()}
+    if snap in done:
         return {"run_id": run_id, "snapshot": snap, "resumed": True}
 
     docs = pages.select(F.col("url").alias("id"), "text", "warc_date")
@@ -263,10 +248,7 @@ def run_global_dedup(spark: SparkSession, warehouse: str,
         st = catalog.read("dedup_state").first()
     if incremental and catalog.exists("dup_clusters"):
         prior = catalog.read("dup_clusters")
-        prior_days = sorted(str(r[0]) for r in
-                            prior.select("warc_date").distinct().collect())
-        prior_snap = hashlib.md5(
-            ",".join(prior_days).encode()).hexdigest()[:16]
+        prior_days, prior_snap = _snapshot(prior)
         # honor chain_depth only when the state row was written FOR the
         # snapshot dup_clusters currently represents (ADVICE r4): a
         # stale marker — dup_clusters wiped/rebuilt out-of-band, or
@@ -275,7 +257,7 @@ def run_global_dedup(spark: SparkSession, warehouse: str,
         if st is not None and str(st.snapshot) == prior_snap:
             prior_depth = int(st.chain_depth)
         if (prior_days and set(prior_days) < set(days)
-                and _lineage_done(prior_snap)
+                and prior_snap in done
                 and (full_rebuild_every is None
                      or prior_depth + 1 < full_rebuild_every)):
             mode = "delta"
@@ -318,7 +300,7 @@ def run_global_dedup(spark: SparkSession, warehouse: str,
         edges = _neardup_edges(docs, n, num_hashes, bands,
                                threshold, max_bucket_size)
 
-    labels = _labels_for(all_ids, edges)
+    labels = connected_components(all_ids, edges)
     csize = labels.groupBy("label").agg(F.count("*").alias("cluster_size"))
     clusters = (docs.select("id", "warc_date")
                 .join(labels, "id")
@@ -340,9 +322,11 @@ def run_global_dedup(spark: SparkSession, warehouse: str,
     import shutil
     shutil.rmtree(tmp, ignore_errors=True)
 
-    out = catalog.read("dup_clusters")
-    n_rows = out.count()
-    n_clusters = out.select("cluster_id").distinct().count()
+    stats = catalog.read("dup_clusters").agg(
+        F.count("*").alias("rows"),
+        F.count_distinct("cluster_id").alias("clusters"),
+        F.count(F.when(F.col("is_canonical"), 1)).alias("canonical")).first()
+    n_rows, n_clusters = stats["rows"], stats["clusters"]
     lin = spark.createDataFrame(
         [(run_id, GLOBAL_DEDUP_STAGE, snap, "done", n_rows, n_clusters)],
         "run_id string, stage string, partition_key string, "
@@ -361,4 +345,4 @@ def run_global_dedup(spark: SparkSession, warehouse: str,
             "mode": "delta-approx" if mode == "delta" else mode,
             "delta_depth": depth, "lsh_docs": lsh_docs,
             "rows": n_rows, "clusters": n_clusters,
-            "dup_rows": n_rows - out.filter("is_canonical").count()}
+            "dup_rows": n_rows - stats["canonical"]}

@@ -565,6 +565,33 @@ def test_series_fingerprint_native_matches_pandas_path(spark):
     assert a["fingerprint"].nunique() == 17
 
 
+def test_connected_components_evaluates_edges_once(spark):
+    """The edge plan runs exactly once per connected_components call
+    (every propagation round reads one materialized edge list), ids
+    absent from the edges label themselves, and a chain takes the min
+    reachable id."""
+    from pyspark.sql.types import LongType
+    acc = spark.sparkContext.accumulator(0)
+
+    def _count(x):
+        acc.add(1)
+        return x
+
+    counted = F.udf(_count, LongType())
+    ids = spark.range(10).select("id")
+    # chain 7-3-5 plus the pair 1-8; 0, 2, 4, 6, 9 are singletons
+    edges = (spark.createDataFrame([(7, 3), (3, 5), (1, 8)],
+                                   "a long, b long")
+             .select(counted("a").alias("id_a"), F.col("b").alias("id_b")))
+    got = dict(dedup.connected_components(ids, edges).collect())
+    assert acc.value == 3
+    assert got == {0: 0, 1: 1, 2: 2, 3: 3, 4: 4, 5: 3, 6: 6, 7: 3,
+                   8: 1, 9: 9}
+    none = spark.createDataFrame([], "id_a long, id_b long")
+    got = dict(dedup.connected_components(ids, none).collect())
+    assert got == {i: i for i in range(10)}
+
+
 def test_template_clusters_synthetic_family(spark):
     """Judge r3 task #10: pages from one boilerplate template (shared
     chrome, varying payload — NOT near-dups at whole-doc Jaccard)

@@ -119,7 +119,7 @@ def test_global_dedup_cross_day_clusters_and_resume(spark, pages_df,
 def test_metrics_dimensions_and_ratings(spark, pages_df):
     out = run_quality_filter(spark, pages_df)
     verdicts = out.verdicts.withColumn("warc_date", F.to_date("warc_ts"))
-    mets = dimension_metrics(verdicts, "warc_date").toPandas()
+    mets = dimension_metrics(verdicts).toPandas()
 
     assert set(mets["dimension"]) == set(DIMENSIONS) | {"overall"}
     assert ((mets["score"] >= 0) & (mets["score"] <= 1.0001)).all()
@@ -130,7 +130,7 @@ def test_metrics_details_map(spark, pages_df):
     # the reference 3-tuple contract: (score, explanation, details)
     out = run_quality_filter(spark, pages_df)
     verdicts = out.verdicts.withColumn("warc_date", F.to_date("warc_ts"))
-    mets = dimension_metrics(verdicts, "warc_date")
+    mets = dimension_metrics(verdicts)
     assert dict(mets.dtypes)["details"] == "map<string,string>"
     pdf = mets.toPandas()
     comp = pdf[pdf.dimension == "completeness"].iloc[0]
@@ -148,7 +148,7 @@ def test_metrics_semantic_coherence_oracle(spark, pages_df, pages_pdf,
                                            golden):
     out = run_quality_filter(spark, pages_df)
     verdicts = out.verdicts.withColumn("warc_date", F.to_date("warc_ts"))
-    mets = dimension_metrics(verdicts, "warc_date").toPandas()
+    mets = dimension_metrics(verdicts).toPandas()
 
     g = golden.merge(
         pages_pdf[["url", "warc_ts"]], on="url", how="left")
