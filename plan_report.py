@@ -27,6 +27,9 @@ AUDIT = [
     ("q5_nation_revenue", ["BroadcastHashJoin"]),
     ("topk_docs_per_lang", ["Window", "RunningWindowFunction|row_number"]),
     ("dedup_minhash_lsh", ["HashAggregate"]),
+    # signatures come from the same id-keyed codegen aggregate as the
+    # LSH bands, not from row-local array lambdas
+    ("dedup_minhash_signatures", ["HashAggregate"]),
     ("ann_topk_bruteforce", ["BroadcastNestedLoopJoin|BroadcastHashJoin"]),
     # verdict dedup is an aggregate+join since r5 (judge r4 task #1):
     # map-side partial agg absorbs duplication, the SHUFFLE_HASH join
@@ -392,7 +395,8 @@ def main() -> None:
     # runtime AQE skew-split evidence: execute a Zipf-skewed domain
     # join with reachable thresholds and capture the FINAL adaptive
     # plan (the runtime half of the skew story; compile-time half is
-    # salted_domain_counts). Mirrors tests/test_skew_aqe.py.
+    # the registry's salted_source_counts). Mirrors
+    # tests/test_skew_aqe.py.
     _skew_confs = {
         "spark.sql.autoBroadcastJoinThreshold": "-1",
         "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "2.0",

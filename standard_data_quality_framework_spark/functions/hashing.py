@@ -6,9 +6,8 @@ Spark (``conv(substring(md5(s),1,15),16,10)``) and DuckDB
 (``('0x' || substr(md5(s),1,15))::BIGINT``) compute identically, so
 every operator has an exact SQL oracle.
 
-At production scale you'd flip HASH_IMPL to xxhash64 (Spark-native,
-~5× faster, no hex round-trip) — the operators take the hash
-expression as an injectable, and correctness tests pin the md5 path.
+The operators call hash60 directly (there is no switchable hash
+implementation) and the correctness tests pin this md5 path.
 
 MinHash/SimHash constants are derived from md5 of fixed strings (no
 RNG): reproducible everywhere, embeddable as literals in oracle SQL.

@@ -195,7 +195,7 @@ def _dsir_features(df: DataFrame, id_col: str, text_col: str,
     # explode_OUTER + isNotNull: a plain explode's inferred
     # size()>0 filter would re-evaluate the interpreted bigram build
     # below the fan-out exchange (serial scan stage) — see
-    # dedup.word_shingles. Only null-text rows produce a null gram
+    # dedup._shingle_rows. Only null-text rows produce a null gram
     # row, and those were dropped by the plain explode too.
     return (df.select(F.col(id_col).alias("id"),
                       F.explode_outer(F.concat(toks, bigrams))

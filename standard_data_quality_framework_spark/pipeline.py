@@ -16,8 +16,7 @@ Design notes (scale-first):
     hashes are uniform across DISTINCT contents but duplication
     multiplicity is not — a mega-duplicated page is a hot key — so the
     dedup is an aggregate+join (O(n) streaming on the hot key), never
-    a window sort; see with_verdict. Per-domain aggregations (skewed!)
-    go through ``salted_domain_counts``.
+    a window sort; see with_verdict.
   * Native expressions everywhere except the one fused UDF
     (functions/udfs.py). No row-at-a-time Python UDFs, no collect().
 
@@ -32,7 +31,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .config import (N_URL_BUCKETS, RULES, SALT_BUCKETS, STOPWORD_PATTERN)
+from .config import N_URL_BUCKETS, RULES, STOPWORD_PATTERN
 from .functions.udfs import make_udfs
 
 
@@ -198,43 +197,34 @@ def with_verdict(df: DataFrame) -> DataFrame:
 
 def with_partition_cols(df: DataFrame) -> DataFrame:
     """Iceberg-style partition transform columns: days(warc_ts) +
-    bucket(N, url). Written as physical partition columns by the sink."""
+    bucket(N, url). The sinks partition by ``warc_date`` only;
+    ``url_bucket`` is written as a plain data column."""
     return (df.withColumn("warc_date", F.to_date("warc_ts"))
               .withColumn("url_bucket",
                           F.pmod(F.xxhash64("url"), F.lit(N_URL_BUCKETS))
                           .cast("int")))
 
 
-def salted_domain_counts(df: DataFrame) -> DataFrame:
-    """Per-domain doc counts with two-phase salted aggregation.
-
-    Web domains are Zipf-skewed: a handful of domains hold a large
-    share of pages, so a naive groupBy(domain) funnels them into few
-    reducers. Phase 1 aggregates on (domain, salt) — SALT_BUCKETS-way
-    fan-out of the hot keys; phase 2 combines the partials. Both
-    phases get map-side partial aggregation from Spark for free.
-    """
-    domain = F.parse_url(F.col("url"), F.lit("HOST"))
-    salted = (
-        df.select(domain.alias("domain"),
-                  F.pmod(F.xxhash64("url"), F.lit(SALT_BUCKETS))
-                  .alias("_salt"))
-        .groupBy("domain", "_salt").agg(F.count("*").alias("_partial"))
-    )
-    return (salted.groupBy("domain")
-            .agg(F.sum("_partial").alias("n_docs")))
-
-
 # ---------------------------------------------------------------------------
 # Full pipeline
 # ---------------------------------------------------------------------------
 
+def kept_pages(verdicts: DataFrame) -> DataFrame:
+    """The kept-pages sink frame of a verdicts frame: (url, warc_ts,
+    text=scrubbed, lang=lang_pred, warc_date, url_bucket) per kept
+    row — no html: the sink contract is verdict + scrubbed text per
+    doc."""
+    return (verdicts.filter(F.col("keep"))
+            .select("url", "warc_ts",
+                    F.col("scrubbed_text").alias("text"),
+                    F.col("lang_pred").alias("lang"),
+                    "warc_date", "url_bucket"))
+
+
 @dataclass
 class PipelineOutput:
     verdicts: DataFrame  # full per-doc frame (signals + verdict + scrub)
-    kept: DataFrame      # (url, warc_ts, text=scrubbed, lang=lang_pred,
-    #                       warc_date, url_bucket) — no html: the sink
-    #                       contract is verdict + scrubbed text per doc
+    kept: DataFrame      # kept_pages(verdicts)
     signals: DataFrame | None = None  # pre-verdict frame (before the
     #                       dedup checkpoint barrier) — the plan audit
     #                       asserts the single fused ArrowEvalPython
@@ -289,10 +279,4 @@ def run_quality_filter(spark: SparkSession, pages: DataFrame,
                         F.coalesce(F.col("_scrub_opt"), F.col("etext")))
           .drop("_scrub_opt"))
     df = with_partition_cols(df)
-
-    kept = (df.filter(F.col("keep"))
-            .select("url", "warc_ts",
-                    F.col("scrubbed_text").alias("text"),
-                    F.col("lang_pred").alias("lang"),
-                    "warc_date", "url_bucket"))
-    return PipelineOutput(verdicts=df, kept=kept, signals=sig)
+    return PipelineOutput(verdicts=df, kept=kept_pages(df), signals=sig)

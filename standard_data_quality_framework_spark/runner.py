@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 
 from .metrics import dimension_metrics, dropped_by_rule, lineage_rows
 from .operators.dedup import connected_components
-from .pipeline import run_quality_filter, with_partition_cols
+from .pipeline import kept_pages, run_quality_filter, with_partition_cols
 from .sources.catalog import ParquetCatalog
 
 STAGE = "quality_filter"
@@ -91,12 +91,8 @@ def run(spark: SparkSession, pages: DataFrame, warehouse: str,
     # one materialization of the verdict frame feeds all four sinks
     verdicts = observed.persist()
     try:
-        kept = (verdicts.filter(F.col("keep"))
-                .select("url", "warc_ts",
-                        F.col("scrubbed_text").alias("text"),
-                        F.col("lang_pred").alias("lang"),
-                        "warc_date", "url_bucket"))
-        catalog.overwrite_partitions(kept, "pages_filtered", ["warc_date"])
+        catalog.overwrite_partitions(kept_pages(verdicts), "pages_filtered",
+                                     ["warc_date"])
 
         # per-partition overwrite (NOT append): a replay of a partition
         # whose lineage never committed replaces its own rows — resume
@@ -135,7 +131,9 @@ def _neardup_edges(docs: DataFrame, n: int, num_hashes: int, bands: int,
     generation (a 10^5-doc template cluster would alone emit ~5·10^9
     candidate pairs), and the exact path guarantees byte-identical
     template docs still cluster — B identical docs cost B−1 star
-    edges through a uniform-key window, never B²/2 pairs."""
+    edges, never B²/2 pairs. Those edges come from exact_duplicates'
+    content-hash window, a key duplication skews: all B copies land in
+    one window partition."""
     from .operators.dedup import exact_duplicates, minhash_lsh_pairs
     lsh = (minhash_lsh_pairs(docs, "id", "text", n=n,
                              num_hashes=num_hashes, bands=bands,
@@ -159,8 +157,7 @@ def run_global_dedup(spark: SparkSession, warehouse: str,
                      threshold: float = 0.85,
                      max_bucket_size: int | None = 500,
                      incremental: bool = True,
-                     delta_member_sample: int = 0,
-                     full_rebuild_every: int | None = None) -> dict:
+                     delta_member_sample: int = 0) -> dict:
     """Cross-day near-duplicate clustering over the whole
     ``pages_filtered`` warehouse table → ``dup_clusters``.
 
@@ -190,12 +187,11 @@ def run_global_dedup(spark: SparkSession, warehouse: str,
     near-clique LSH clusters (threshold ≥ 0.85) the canonical is
     usually an ε-cover of its cluster and the labels coincide (the
     warehouse tests exercise that benign case), but it is a
-    heuristic, not a guarantee. Two knobs bound the drift:
-    ``delta_member_sample=k`` also pairs new docs against up to k
-    deterministically-sampled non-canonical members per prior
-    cluster; ``full_rebuild_every=m`` forces a full rebuild after m
-    consecutive delta ingests (chain depth is tracked in the tiny
-    ``dedup_state`` table).
+    heuristic, not a guarantee. ``delta_member_sample=k`` narrows the
+    drift by also pairing new docs against up to k deterministically-
+    sampled non-canonical members per prior cluster;
+    ``incremental=False`` (``spark_submit_main.py --full-dedup``)
+    rebuilds from scratch.
 
     Resume contract: the unit of work is the SNAPSHOT — the sorted set
     of warc_dates present in pages_filtered, fingerprinted into
@@ -238,28 +234,14 @@ def run_global_dedup(spark: SparkSession, warehouse: str,
     all_ids = docs.select("id").distinct()
 
     # delta eligibility: dup_clusters holds a committed strict-subset
-    # snapshot of the current day set, and the delta chain is shorter
-    # than full_rebuild_every (drift bound)
+    # snapshot of the current day set
     mode = "full"
     prior = None
-    prior_depth = 0
-    st = None
-    if catalog.exists("dedup_state"):
-        st = catalog.read("dedup_state").first()
     if incremental and catalog.exists("dup_clusters"):
         prior = catalog.read("dup_clusters")
         prior_days, prior_snap = _snapshot(prior)
-        # honor chain_depth only when the state row was written FOR the
-        # snapshot dup_clusters currently represents (ADVICE r4): a
-        # stale marker — dup_clusters wiped/rebuilt out-of-band, or
-        # state left by an aborted sequence — would force or defer full
-        # rebuilds at the wrong cadence. Mismatch ⇒ treat depth as 0.
-        if st is not None and str(st.snapshot) == prior_snap:
-            prior_depth = int(st.chain_depth)
         if (prior_days and set(prior_days) < set(days)
-                and prior_snap in done
-                and (full_rebuild_every is None
-                     or prior_depth + 1 < full_rebuild_every)):
+                and prior_snap in done):
             mode = "delta"
             new_days = sorted(set(days) - set(prior_days))
 
@@ -333,16 +315,10 @@ def run_global_dedup(spark: SparkSession, warehouse: str,
         "status string, rows_in long, rows_out long") \
         .withColumn("finished_ts", F.current_timestamp())
     catalog.append(lin, "lineage")
-    # delta-chain depth marker for full_rebuild_every (one tiny row)
-    depth = 0 if mode == "full" else prior_depth + 1
-    spark.createDataFrame(
-        [(snap, mode, depth, run_id)],
-        "snapshot string, mode string, chain_depth int, run_id string") \
-        .write.mode("overwrite").parquet(catalog.path("dedup_state"))
     return {"run_id": run_id, "snapshot": snap, "resumed": False,
             # 'delta-approx', not 'delta': labels can diverge from a
             # from-scratch rebuild (see docstring)
             "mode": "delta-approx" if mode == "delta" else mode,
-            "delta_depth": depth, "lsh_docs": lsh_docs,
+            "lsh_docs": lsh_docs,
             "rows": n_rows, "clusters": n_clusters,
             "dup_rows": n_rows - stats["canonical"]}

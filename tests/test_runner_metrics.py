@@ -287,7 +287,7 @@ def test_global_dedup_delta_chain_three_phase(spark, tmp_path):
         + [("w1", 1, _BASE), ("w2", 2, _BASE + " extra")])  # LSH pair
     _write_pages_filtered(spark, wh, day12)
     r1 = run_global_dedup(spark, wh, run_id="c-f", threshold=0.8)
-    assert r1["mode"] == "full" and r1["delta_depth"] == 0
+    assert r1["mode"] == "full"
 
     # day3: a01 joins the exact cluster AND steals its canonical slot
     day3 = ([("a01", 3, tmpl)]
@@ -295,7 +295,7 @@ def test_global_dedup_delta_chain_three_phase(spark, tmp_path):
                for i in range(4)])
     _write_pages_filtered(spark, wh, day3, mode="append")
     r2 = run_global_dedup(spark, wh, run_id="c-d1", threshold=0.8)
-    assert r2["mode"] == "delta-approx" and r2["delta_depth"] == 1
+    assert r2["mode"] == "delta-approx"
     mid = spark.read.parquet(f"{wh}/dup_clusters").toPandas()
     assert (mid.set_index("url")["cluster_id"]["x1"] == "a01")
 
@@ -305,7 +305,7 @@ def test_global_dedup_delta_chain_three_phase(spark, tmp_path):
                for i in range(4)])
     _write_pages_filtered(spark, wh, day4, mode="append")
     r3 = run_global_dedup(spark, wh, run_id="c-d2", threshold=0.8)
-    assert r3["mode"] == "delta-approx" and r3["delta_depth"] == 2
+    assert r3["mode"] == "delta-approx"
 
     # from-scratch reference over all four days
     wh2 = str(tmp_path / "wh_chain_full")
@@ -324,30 +324,6 @@ def test_global_dedup_delta_chain_three_phase(spark, tmp_path):
     cl = a.drop_duplicates("url").set_index("url")["cluster_id"]
     assert cl["z9"] == cl["x1"] == cl["x2"] == cl["a01"] == "a01"
     assert cl["w4"] == cl["w1"] == cl["w2"] == "w1"
-
-
-def test_global_dedup_full_rebuild_every(spark, tmp_path):
-    """full_rebuild_every=2 bounds the delta chain: the second
-    consecutive ingest after a full run is forced back to full."""
-    wh = str(tmp_path / "wh_rb")
-    rows = [(f"p{i:02d}", 1, f"doc {i} " + _BASE[: 40 + i]) for i in range(5)]
-    _write_pages_filtered(spark, wh, rows)
-    r1 = run_global_dedup(spark, wh, run_id="rb-f", threshold=0.8)
-    assert r1["mode"] == "full"
-
-    _write_pages_filtered(
-        spark, wh, [("n1", 2, "new day two text " + _BASE[:30])],
-        mode="append")
-    r2 = run_global_dedup(spark, wh, run_id="rb-d1", threshold=0.8,
-                          full_rebuild_every=2)
-    assert r2["mode"] == "delta-approx" and r2["delta_depth"] == 1
-
-    _write_pages_filtered(
-        spark, wh, [("n2", 3, "new day three text " + _BASE[:30])],
-        mode="append")
-    r3 = run_global_dedup(spark, wh, run_id="rb-d2", threshold=0.8,
-                          full_rebuild_every=2)
-    assert r3["mode"] == "full" and r3["delta_depth"] == 0
 
 
 def test_global_dedup_delta_member_sample(spark, tmp_path):
@@ -384,30 +360,3 @@ def test_global_dedup_delta_member_sample(spark, tmp_path):
         out = spark.read.parquet(f"{wh}/dup_clusters").toPandas()
         cl = out.drop_duplicates("url").set_index("url")["cluster_id"]
         assert (cl["md3"] == "ma1") is expect_linked
-
-
-def test_global_dedup_stale_state_depth_ignored(spark, tmp_path):
-    """ADVICE r4 (low): a dedup_state row left over from an aborted
-    sequence (or an out-of-band dup_clusters rebuild) must not skew
-    the full_rebuild_every cadence — chain_depth is honored only when
-    the state's snapshot matches what dup_clusters currently holds."""
-    wh = str(tmp_path / "wh_stale")
-    rows = [(f"p{i:02d}", 1, f"doc {i} " + _BASE[: 40 + i]) for i in range(5)]
-    _write_pages_filtered(spark, wh, rows)
-    r1 = run_global_dedup(spark, wh, run_id="st-f", threshold=0.8)
-    assert r1["mode"] == "full"
-
-    # corrupt the state: bogus snapshot + depth already at the cadence
-    # limit — with the old unconditional read this forces a full rebuild
-    spark.createDataFrame(
-        [("deadbeefdeadbeef", "delta", 99, "bogus")],
-        "snapshot string, mode string, chain_depth int, run_id string") \
-        .write.mode("overwrite").parquet(f"{wh}/dedup_state")
-
-    _write_pages_filtered(
-        spark, wh, [("n1", 2, "new day two text " + _BASE[:30])],
-        mode="append")
-    r2 = run_global_dedup(spark, wh, run_id="st-d1", threshold=0.8,
-                          full_rebuild_every=2)
-    # stale depth ignored → treated as a fresh chain: delta, depth 1
-    assert r2["mode"] == "delta-approx" and r2["delta_depth"] == 1

@@ -1,7 +1,8 @@
 """AQE skew-join evidence (judge r2 task #8): a Zipf-skewed domain
 join must trigger adaptive skew-partition splitting — the runtime
 half of the north rule's skew story (the compile-time half is the
-salted two-phase aggregation in pipeline.salted_domain_counts)."""
+salted two-phase aggregation of the registry's
+salted_source_counts query)."""
 
 from __future__ import annotations
 
