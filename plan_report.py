@@ -69,6 +69,11 @@ AUDIT = [
     ("line_dedup_documents",
      ["ShuffledHashJoin",
       r"Aggregate(.|\n)*Exchange(.|\n)*Aggregate"]),
+    # exact dedup: the same keep-first aggregate + join, no window over
+    # the content hash
+    ("dedup_exact_keep_first",
+     ["ShuffledHashJoin",
+      r"Aggregate(.|\n)*Exchange(.|\n)*Aggregate"]),
     ("url_dedup_documents",
      ["ShuffledHashJoin",
       r"Aggregate(.|\n)*Exchange(.|\n)*Aggregate"]),
@@ -146,6 +151,8 @@ AUDIT = [
 FORBID_EXTRA = [
     ("pipeline_verdict_documents", ["Window", "CartesianProduct"]),
     ("line_dedup_documents",
+     ["Window", "CartesianProduct", "BroadcastNestedLoopJoin"]),
+    ("dedup_exact_keep_first",
      ["Window", "CartesianProduct", "BroadcastNestedLoopJoin"]),
     ("url_dedup_documents",
      ["Window", "CartesianProduct", "BroadcastNestedLoopJoin"]),

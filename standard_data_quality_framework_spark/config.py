@@ -108,9 +108,9 @@ DIMENSIONS: list[str] = [
 # --- schema contract ---------------------------------------------------------
 # Expected input columns for the quality-filter use case — the scored
 # schema-presence check (reference: config/use_case_config.py:7-18
-# expected_columns per use case). runner.run() scores the input frame
-# against this list (operators/quality.py::expected_columns_presence)
-# and reports it in the run summary.
+# expected_columns per use case). runner.run() rejects an input frame
+# missing any of them (a set difference on its columns, no Spark job)
+# and reports schema_presence in the run summary.
 EXPECTED_PAGE_COLUMNS: list[str] = ["url", "warc_ts", "html", "text", "lang"]
 
 # --- partitioning / scale knobs ---------------------------------------------

@@ -43,11 +43,11 @@ _WIDE_NODE = re.compile(
     r"Deduplicate\b|CoGroup\b|FlatMapGroups|MapGroups|GlobalLimit\b)")
 
 
-def fan_out(df: DataFrame, min_parts: int | None = None) -> DataFrame:
+def fan_out(df: DataFrame) -> DataFrame:
     """Repartition ``df`` to the session's default parallelism iff it
     is a narrow scan-rooted frame with fewer partitions — a no-op on
     well-split or already-shuffled inputs."""
-    target = min_parts or df.sparkSession.sparkContext.defaultParallelism
+    target = df.sparkSession.sparkContext.defaultParallelism
     plan = df._jdf.queryExecution().analyzed().toString()
     if _WIDE_NODE.search(plan):
         return df

@@ -3,15 +3,15 @@
 Five families, all Catalyst-native (no UDFs), all with exact SQL
 oracles via the md5-prefix hash (functions/hashing.py):
 
-  exact        — content-hash groupBy, keep min-id               O(n)
+  exact        — first-per-key aggregate + join, keep min-id     O(n)
   ngram-jaccard— df-capped shingle join → exact verify           O(capped collisions)
   minhash-LSH  — id-keyed min aggregate → b bands → bucket join  O(n·k + collisions)
   simhash      — sign fingerprint, (max_hamming+1)-band pairing  O(n + collisions)
   embedding    — cosine near-dup, sign-LSH bucketed              O(pairs in bucket)
 
 Scale notes (10^12 docs): every family shuffles on a *hash* key —
-uniform across distinct keys (exact_duplicates' content hash is the
-exception: duplication multiplicity skews it). Candidate generation
+uniform across distinct keys; the keep-first keys that duplication
+skews go through _first_per_key's aggregate + join. Candidate generation
 is always bounded (LSH bands / df-capped shingles / LSH buckets),
 never all-pairs; exact verification runs on candidates only, via
 ``array_intersect`` over per-doc shingle sets so the shingle frame is
@@ -27,7 +27,7 @@ ratio (quality_checks.py:245-275), O(k²)→O(k) fingerprinting
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.hashing import (MERSENNE31, hash60, minhash_coeffs)
@@ -89,17 +89,40 @@ def _shingle_rows(ss: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# exact dedup
+# keep-first-per-key (exact, URL and line dedup; the pipeline verdict)
 # ---------------------------------------------------------------------------
+
+def _first_per_key(df: DataFrame, keys: list[str],
+                   order: str | Column) -> DataFrame:
+    """``df`` plus ``_first`` = min(``order``) per ``keys`` group: the
+    one keep-first step of every exact-match dedup (exact, URL, line,
+    the pipeline verdict). Duplication makes these keys hot, so this is
+    ``groupBy(keys).agg(min)`` joined back with a SHUFFLE_HASH hint:
+    map-side partial aggregation collapses any duplication level before
+    the shuffle, and the shuffle join is a node AQE can split when one
+    key is skewed. A window would sort every copy of a hot key in ONE
+    task (AQE does not split windows — operators/asof.py).
+
+    Keys must be non-NULL — the inner join drops NULL keys — so callers
+    make them total (a null-safe ``<=>`` join plans one more exchange).
+    ``df`` is read twice (aggregate + probe); an expensive upstream
+    wants a barrier in front (see pipeline.with_verdict)."""
+    first = df.groupBy(*keys).agg(F.min(order).alias("_first"))
+    return df.join(first.hint("SHUFFLE_HASH"), keys)
+
 
 def exact_duplicates(df: DataFrame, id_col: str,
                      text_col: str) -> DataFrame:
-    """(id, content_hash, is_dup, kept_id): min-id per content wins."""
-    h = F.md5(F.col(text_col)).alias("content_hash")
-    w = Window.partitionBy("content_hash")
-    return (df.select(F.col(id_col).alias("id"), h)
-            .withColumn("kept_id", F.min("id").over(w))
-            .withColumn("is_dup", F.col("id") != F.col("kept_id")))
+    """(id, content_hash, kept_id, is_dup): min-id per content wins
+    (_first_per_key). The key ``coalesce(md5(text), '')`` (no md5 hex
+    is empty) makes NULL text one group, as ``PARTITION BY md5(text)``
+    does; ``content_hash`` stays ``md5(text)``."""
+    h = F.md5(F.col(text_col))
+    keyed = df.select(F.col(id_col).alias("id"), h.alias("content_hash"),
+                      F.coalesce(h, F.lit("")).alias("_k"))
+    return (_first_per_key(keyed, ["_k"], "id")
+            .select("id", "content_hash", F.col("_first").alias("kept_id"),
+                    (F.col("id") != F.col("_first")).alias("is_dup")))
 
 
 # ---------------------------------------------------------------------------
@@ -675,10 +698,9 @@ def url_dedup(df: DataFrame, id_col: str, url_col: str) -> DataFrame:
     per normalized URL is canonical; every other row is flagged, not
     dropped, so callers choose filter vs audit.
 
-    Scale shape: same skew-safe aggregate+join as ``line_dedup`` /
-    ``pipeline.with_verdict`` — a crawl frontier revisiting one viral
-    URL 10^8 times collapses in map-side partial aggregation; no
-    window sort over the URL key.
+    Scale shape: _first_per_key over the URL key — a crawl frontier
+    revisiting one viral URL 10^8 times collapses in map-side partial
+    aggregation; no window sort over the URL key.
 
     NULL urls: an unknown URL is not "the same page" as another unknown
     URL, so each NULL-url row stays its own canonical (never dropped,
@@ -692,10 +714,9 @@ def url_dedup(df: DataFrame, id_col: str, url_col: str) -> DataFrame:
     ids = ids.withColumn(
         "_ukey", F.coalesce("url_norm",
                             F.concat(F.lit("\x00"), F.col("id").cast("string"))))
-    canon = ids.groupBy("_ukey").agg(F.min("id").alias("canonical_id"))
-    return (ids.join(canon.hint("SHUFFLE_HASH"), "_ukey")
-            .select("id", "url_norm", "canonical_id",
-                    (F.col("id") != F.col("canonical_id")).alias("is_dup")))
+    return (_first_per_key(ids, ["_ukey"], "id")
+            .select("id", "url_norm", F.col("_first").alias("canonical_id"),
+                    (F.col("id") != F.col("_first")).alias("is_dup")))
 
 
 def url_host_stats(df: DataFrame, id_col: str, url_col: str) -> DataFrame:
@@ -707,7 +728,7 @@ def url_host_stats(df: DataFrame, id_col: str, url_col: str) -> DataFrame:
     which are all-duplicate) and the input for per-domain quota
     decisions (`sampling.domain_quota_sample`).
 
-    Scale shape: ``url_dedup``'s skew-safe aggregate+join, then a
+    Scale shape: ``url_dedup``'s _first_per_key, then a
     groupBy(host) of algebraic aggregates — map-side partial
     aggregation combines a mega-host's rows before the shuffle, so one
     domain owning half the crawl adds one combined row per map
@@ -738,23 +759,19 @@ def line_dedup(df: DataFrame, id_col: str, text_col: str,
     whose every line was deduplicated away comes back with empty text.
 
     Scale shape: posexplode to line rows (the honest cost — corpus-
-    level dedup must see every line once), then a groupBy on the
-    128-bit line hash with map-side partial aggregation (a boilerplate
-    line repeated 10^9 times collapses per input partition — the same
-    skew-immunity argument as pipeline.with_verdict), a hash-join back
-    on the same uniform key, and one id-keyed reassembly aggregation.
-    No window over the line-hash key: a viral line never serializes
-    into one sorting task.
+    level dedup must see every line once), then _first_per_key on the
+    128-bit line hash (a boilerplate line repeated 10^9 times collapses
+    per input partition; no window sorts a viral line in one task) and
+    one id-keyed reassembly aggregation.
     """
     lines = df.select(
         F.col(id_col).alias("id"),
         F.posexplode(F.split(F.col(text_col), "\n")).alias("pos", "line"))
     dd = (lines.filter(F.length("line") >= min_len)
           .withColumn("_h", F.md5("line")))
-    firsts = dd.groupBy("_h").agg(F.min(F.struct("id", "pos")).alias("_f"))
-    kept_dd = (dd.join(firsts.hint("SHUFFLE_HASH"), "_h")
-               .filter((F.col("id") == F.col("_f.id"))
-                       & (F.col("pos") == F.col("_f.pos")))
+    kept_dd = (_first_per_key(dd, ["_h"], F.struct("id", "pos"))
+               .filter((F.col("id") == F.col("_first.id"))
+                       & (F.col("pos") == F.col("_first.pos")))
                .select("id", "pos", "line"))
     exempt = (lines.filter(F.length("line") < min_len)
               .select("id", "pos", "line"))

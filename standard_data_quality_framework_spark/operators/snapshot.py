@@ -26,8 +26,7 @@ def crawl_diff(prev: DataFrame, curr: DataFrame, key_col: str,
     of two snapshots: status ∈ added | removed | changed | unchanged
     by md5 content hash. One hash join on the uniform key."""
     # md5(NULL) is NULL, which would misread a present-but-null row as
-    # side-missing ("added"/"removed"); hash the empty string instead
-    # (same null-safe pattern as streaming_exact_dedup).
+    # side-missing ("added"/"removed"); hash the empty string instead.
     nz = F.md5(F.coalesce(F.col(content_col), F.lit("")))
     a = prev.select(F.col(key_col).alias("key"), nz.alias("prev_hash"))
     b = curr.select(F.col(key_col).alias("key"), nz.alias("curr_hash"))

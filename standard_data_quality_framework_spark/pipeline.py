@@ -12,10 +12,8 @@ Design notes (scale-first):
     pandas UDF. (The reference re-scans the dataset once per check —
     /root/reference/src/quality_checks.py:360-380 — we do not.)
   * The only full-row shuffle before the sinks is the exact-duplicate
-    exchange (hash-partition by (crawl day, md5(text))). Content
-    hashes are uniform across DISTINCT contents but duplication
-    multiplicity is not — a mega-duplicated page is a hot key — so the
-    dedup is an aggregate+join (O(n) streaming on the hot key), never
+    exchange (hash-partition by (crawl day, md5(text))) — the skew-
+    safe aggregate + join of operators/dedup.py::_first_per_key, never
     a window sort; see with_verdict.
   * Native expressions everywhere except the one fused UDF
     (functions/udfs.py). No row-at-a-time Python UDFs, no collect().
@@ -33,6 +31,7 @@ from pyspark.sql import functions as F
 
 from .config import N_URL_BUCKETS, RULES, STOPWORD_PATTERN
 from .functions.udfs import make_udfs
+from .operators.dedup import _first_per_key
 
 
 # ---------------------------------------------------------------------------
@@ -102,25 +101,15 @@ def with_verdict(df: DataFrame) -> DataFrame:
     """drop_reasons array (in RULE_ORDER) + keep flag.
 
     Per-document rules are pure column expressions; the cross-document
-    exact-dup rule keeps the first occurrence BY URL within a (crawl
-    day, content hash) group — `min(url)` per group joined back, a row
-    is a duplicate iff its url differs from the kept url. Scoping
+    exact-dup rule keeps the first occurrence BY (url, warc_ts) within
+    a (crawl day, content hash) group — a row is a duplicate iff its
+    (url, warc_ts) differs from the group's minimum. Scoping
     dedup to the crawl day keeps the verdict deterministic under ANY
     batching of whole days (the checkpoint/resume unit); cross-day
     dedup is a separate offline operator (operators/dedup.py).
 
-    Skew note (judge r4 task #1): this was a `row_number` window over
-    (day, hash) — correct, but a mega-duplicated page (one viral
-    template crawled 10^8 times in a day) lands ALL its copies in one
-    window partition, and WindowExec must SORT them in a single task
-    (AQE skew-splitting applies to joins, not windows — see
-    operators/asof.py). The aggregate+join shape fixes both failure
-    modes: the `min(url)` aggregate gets map-side partial aggregation
-    (any duplication level collapses to one row per input partition
-    before its shuffle), and the join back is a plain SHUFFLE_HASH
-    equi-join — a shuffle JOIN, which AQE's OptimizeSkewedJoin can
-    split across tasks when one (day, hash) partition is hot, and
-    whose streamed probe never sorts or buffers the group. The lazy
+    The keep-first decision is dedup._first_per_key (aggregate + join,
+    never a window: a mega-duplicated page is a hot key). The lazy
     localCheckpoint is the single-execution barrier: the frame feeds
     two consumers (aggregate + join), and without a materialization
     point Catalyst's column pruning diverges the two subplans so the
@@ -156,9 +145,7 @@ def with_verdict(df: DataFrame) -> DataFrame:
           for rid, cond in per_doc]))
     df = df.withColumn("_reasons_pd", reasons)
 
-    # coalesce guards: an inner equi-join drops NULL keys, a window
-    # would have grouped them — make the key expressions total so the
-    # two shapes stay semantically identical on degenerate inputs.
+    # coalesce guards: _first_per_key needs total keys.
     # NULL etext gets its own sentinel hash group (r5 ADVICE #2): a
     # failed extraction is not "the same page" as an empty one. (Dead
     # on the standard paths, where etext is already coalesced
@@ -178,16 +165,14 @@ def with_verdict(df: DataFrame) -> DataFrame:
     # residual. Unique-url inputs (all declared queries/fixtures) are
     # byte-identical under both keys.
     df = df.withColumn("_vkey", F.struct("url", "warc_ts"))
-    kept = (df.groupBy("_vday", "_vhash")
-            .agg(F.min("_vkey").alias("_kept_key")))
-    df = df.join(kept.hint("SHUFFLE_HASH"), ["_vday", "_vhash"])
+    df = _first_per_key(df, ["_vday", "_vhash"], "_vkey")
     df = df.withColumn(
         "drop_reasons",
-        F.when(~F.col("_vkey").eqNullSafe(F.col("_kept_key")),
+        F.when(~F.col("_vkey").eqNullSafe(F.col("_first")),
                F.concat(F.col("_reasons_pd"),
                         F.array(F.lit("exact_dup"))))
         .otherwise(F.col("_reasons_pd")),
-    ).drop("_reasons_pd", "_vday", "_vhash", "_vkey", "_kept_key")
+    ).drop("_reasons_pd", "_vday", "_vhash", "_vkey", "_first")
     return df.withColumn("keep", F.size("drop_reasons") == 0)
 
 

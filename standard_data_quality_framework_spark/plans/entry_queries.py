@@ -1471,23 +1471,18 @@ def pipeline_verdict_q(spark, sf_dir):
                                      lambda x: F.lower(x)))
     stops = sorted({w for ws in STOPWORDS.values() for w in ws})
     stop_hits = F.size(F.filter(toks_l, lambda x: x.isin(*stops)))
-    # exact-dup via min-id aggregate + join-back, NOT a window: the
-    # agg branch is a second parquet scan pruned to (doc_id, text) with
-    # map-side partial aggregation (any duplication multiplicity
-    # collapses before the shuffle), and the join is a shuffle join
-    # AQE can skew-split — a window would sort the hot content-hash
-    # partition in one task (judge r4 task #1; same shape as
-    # pipeline.with_verdict, minus the checkpoint barrier because the
-    # columnar scan is cheap to run twice)
-    kept = (d.groupBy(F.md5("text").alias("_h"))
-            .agg(F.min("doc_id").alias("_kept_id")))
-    s = (d.withColumn("_h", F.md5("text"))
-         .join(kept.hint("SHUFFLE_HASH"), "_h")
+    # exact-dup via dedup._first_per_key (aggregate + join, no window)
+    # on the total key coalesce(md5(text), ''): NULL-text docs form one
+    # group, as the oracle's PARTITION BY md5(text) does. The agg side
+    # is a second parquet scan pruned to (doc_id, text) — cheap, so no
+    # checkpoint barrier (unlike pipeline.with_verdict).
+    d = d.withColumn("_h", F.coalesce(F.md5("text"), F.lit("")))
+    s = (dedup._first_per_key(d, ["_h"], "doc_id")
          .select(
              "doc_id",
              n_words.alias("n_words"), n_sym.alias("n_sym"),
              nonal.alias("nonalnum_frac"), stop_hits.alias("stop_hits"),
-             (F.col("doc_id") != F.col("_kept_id")).alias("is_dup")))
+             (F.col("doc_id") != F.col("_first")).alias("is_dup")))
     reasons = F.concat(
         F.when(F.col("n_words") == 0, F.lit("empty_text,")).otherwise(""),
         F.when((F.col("n_words") > 0) & (F.col("n_words") < 20),

@@ -131,9 +131,8 @@ def _neardup_edges(docs: DataFrame, n: int, num_hashes: int, bands: int,
     generation (a 10^5-doc template cluster would alone emit ~5·10^9
     candidate pairs), and the exact path guarantees byte-identical
     template docs still cluster — B identical docs cost B−1 star
-    edges, never B²/2 pairs. Those edges come from exact_duplicates'
-    content-hash window, a key duplication skews: all B copies land in
-    one window partition."""
+    edges, never B²/2 pairs, from exact_duplicates' skew-safe
+    aggregate + join (dedup._first_per_key)."""
     from .operators.dedup import exact_duplicates, minhash_lsh_pairs
     lsh = (minhash_lsh_pairs(docs, "id", "text", n=n,
                              num_hashes=num_hashes, bands=bands,
@@ -161,7 +160,7 @@ def run_global_dedup(spark: SparkSession, warehouse: str,
     """Cross-day near-duplicate clustering over the whole
     ``pages_filtered`` warehouse table → ``dup_clusters``.
 
-    The in-pipeline exact-dup window is deliberately scoped to one
+    The in-pipeline exact-dup verdict is deliberately scoped to one
     crawl day (pipeline.py with_verdict); this job supplies the
     reference's DATASET-GLOBAL duplicate semantics
     (/root/reference/src/quality_checks.py:245-275,

@@ -99,7 +99,10 @@ def streaming_exact_dedup(spark: SparkSession, input_dir: str,
     that sees a content hash keeps its min id; every other occurrence —
     same batch or any later batch — is a duplicate of that kept id.
     State is one short string per distinct content, uniform hash key →
-    even state-store partitioning.
+    even state-store partitioning. The key is ``coalesce(md5(text),
+    '')``, the batch exact_duplicates key: NULL-text pages share
+    ``content_hash = ''`` (no md5 hex is empty), apart from empty-text
+    pages.
 
     ``ttl_hours`` bounds state retention (judge r3 task #3): with
     NoTimeout the store grows with every distinct content hash FOREVER
@@ -121,7 +124,7 @@ def streaming_exact_dedup(spark: SparkSession, input_dir: str,
               .parquet(input_dir))
     keyed = stream.select(
         F.col(id_col).alias("id"),
-        F.md5(F.coalesce(F.col(text_col), F.lit(""))).alias("content_hash"))
+        F.coalesce(F.md5(F.col(text_col)), F.lit("")).alias("content_hash"))
 
     ttl_ms = int(ttl_hours * 3_600_000) if ttl_hours is not None else None
 

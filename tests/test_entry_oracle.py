@@ -68,6 +68,29 @@ def test_query_vs_oracle(spark, ddb, name):
                           [b[i] for i in mismatch[:2]])
 
 
+def test_null_text_documents_vs_oracle(spark, tmp_path):
+    """NULL text is one exact-dup group in the oracle (PARTITION BY
+    md5(text)), apart from empty text: the keep-first queries must keep
+    every NULL-text doc and flag all but the smallest id."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    texts = ["alpha beta gamma", None, "alpha beta gamma", None, ""]
+    pq.write_table(pa.table({
+        "doc_id": pa.array(range(5), pa.int64()),
+        "text": pa.array(texts, pa.string()),
+        "lang": ["en"] * 5, "source": ["src0"] * 5,
+        "n_chars": pa.array([len(t or "") for t in texts], pa.int64())}),
+        str(tmp_path / "documents.parquet"))
+    con = duckdb.connect()
+    con.execute("CREATE VIEW documents AS SELECT * FROM "
+                f"'{tmp_path}/documents.parquet'")
+    for name in ("dedup_exact_keep_first", "pipeline_verdict_documents"):
+        sdf = entry_mod.queries()[name](spark, str(tmp_path)).toPandas()
+        odf = con.execute(entry_mod.oracle_sql()[name]).fetchdf()
+        assert len(odf) == 5, name
+        assert _norm(sdf) == _norm(odf), (name, sdf, odf)
+
+
 def test_entry_smoke(spark):
     df = entry_mod.entry(spark)
     assert df.count() > 0

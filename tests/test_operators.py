@@ -33,11 +33,25 @@ def _py_shingles(text, n=5):
 
 
 def test_exact_duplicates(spark, docs):
-    out = dedup.exact_duplicates(docs, "doc_id", "text").toPandas()
+    # two NULL-text rows form one group (SQL's PARTITION BY md5(text)):
+    # the min id is kept, the other is a duplicate of it
+    nulls = spark.createDataFrame([(6, None), (5, None)],
+                                  "doc_id long, text string")
+    df = dedup.exact_duplicates(docs.unionByName(nulls), "doc_id", "text")
+    out = df.toPandas()
     assert out[out.id == 0].is_dup.iloc[0] == False  # noqa: E712
     assert out[out.id == 1].is_dup.iloc[0] == True  # noqa: E712
     assert out[out.id == 1].kept_id.iloc[0] == 0
-    assert out.is_dup.sum() == 1
+    assert out[out.id == 5].is_dup.iloc[0] == False  # noqa: E712
+    assert out[out.id == 6].is_dup.iloc[0] == True  # noqa: E712
+    assert out[out.id == 6].kept_id.iloc[0] == 5
+    assert out[out.id == 6].content_hash.isna().all()
+    assert out.is_dup.sum() == 2
+    # skew-safe keep-first shape: aggregate + shuffle hash join, no
+    # window sorting a hot content hash in one task
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "ShuffledHashJoin" in plan
+    assert "Window" not in plan
 
 
 def test_ngram_jaccard_matches_python(spark, docs):

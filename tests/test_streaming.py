@@ -70,8 +70,11 @@ def test_streaming_stateful_exact_dedup(spark, tmp_path):
          for u, d, t in rows],
         "url string, warc_ts string, html binary, text string, lang string"
     ).withColumn("warc_ts", F.col("warc_ts").cast("timestamp"))
-    # batch 1 file: content X twice (u2, u5), content Y once (u7)
-    mk([("u2", 1, "X"), ("u5", 1, "X"), ("u7", 1, "Y")]) \
+    # batch 1 file: content X twice (u2, u5), content Y once (u7), a
+    # NULL-text page (u3) and an empty-text page (u4) — not the same
+    # content, so neither is flagged
+    mk([("u2", 1, "X"), ("u5", 1, "X"), ("u7", 1, "Y"),
+        ("u3", 1, None), ("u4", 1, "")]) \
         .coalesce(1).write.mode("append").parquet(inp)
     # batch 2 file (maxFilesPerTrigger=1 → separate epoch): X again
     # under a SMALLER id (u1) + fresh content Z
@@ -84,7 +87,7 @@ def test_streaming_stateful_exact_dedup(spark, tmp_path):
     q.awaitTermination(600)
     got = spark.sql("SELECT * FROM sdd").toPandas().set_index("id")
 
-    assert len(got) == 5
+    assert len(got) == 7
     # first batch that saw X keeps its min id (u2); u5 same-batch dup
     assert not got.loc["u2", "is_dup"] and got.loc["u2", "kept_id"] == "u2"
     assert got.loc["u5", "is_dup"] and got.loc["u5", "kept_id"] == "u2"
@@ -92,6 +95,8 @@ def test_streaming_stateful_exact_dedup(spark, tmp_path):
     assert got.loc["u1", "is_dup"] and got.loc["u1", "kept_id"] == "u2"
     assert not got.loc["u7", "is_dup"]
     assert not got.loc["u9", "is_dup"]
+    assert not got.loc["u3", "is_dup"] and not got.loc["u4", "is_dup"]
+    assert got.loc["u3", "content_hash"] == ""
 
 
 def test_streaming_dedup_state_ttl_eviction(spark, tmp_path):
