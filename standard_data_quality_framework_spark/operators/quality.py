@@ -207,7 +207,7 @@ def metadata_granularity(df: DataFrame, meta_cols: list[str],
 
 def with_rating(scored: DataFrame, score_col: str = "score") -> DataFrame:
     """Attach the reference bucket rating (rating.py:4-27)."""
-    return scored.withColumn("rating", bucket_rating(F.col(score_col)))
+    return scored.withColumn("rating", bucket_rating(score_col))
 
 
 def subgroup_diversity(df: DataFrame, group_col: str,

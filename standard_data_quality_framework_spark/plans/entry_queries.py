@@ -489,7 +489,7 @@ def dimension_ratings(spark, sf_dir):
         .select(F.lit("population_representativity").alias("dimension"),
                 "score")
     dims = comp.unionByName(uniq).unionByName(rep) \
-        .withColumn("rating", bucket_rating(F.col("score")))
+        .withColumn("rating", bucket_rating("score"))
     overall = dims.agg(
         F.lit("overall").alias("dimension"),
         F.round(F.avg("score"), 6).alias("score"),
@@ -1771,7 +1771,7 @@ def qualitative_combined(spark, sf_dir):
     comp = quality.completeness(d, ["text", "lang"]).select(
         F.lit("completeness").alias("dimension"), "score")
     quant = uniq.unionByName(comp).withColumn(
-        "rating", bucket_rating(F.col("score")))
+        "rating", bucket_rating("score"))
     answers = dict(zip(DIMENSIONS, [3, 4, 2, 5, 3, 4, 3]))
     qual = qualitative_frame(spark, answers)
     out = combined_overall(quant, qual)

@@ -197,10 +197,13 @@ def run_global_dedup(spark: SparkSession, warehouse: str,
     ``partition_key``. A lineage row (stage=global_dedup, that key,
     done) means dup_clusters is already current for exactly this day
     set; re-running is a no-op, and adding a day changes the key so
-    the job re-runs (full or delta). The dup_clusters write is a full
-    idempotent overwrite — any new day can merge old clusters and move
-    canonicals, so per-partition carry-over would be wrong; the
-    rewrite is one linear pass, the saved work is the quadratic part.
+    the job re-runs (full or delta). The dup_clusters write is a
+    whole-table ``catalog.replace`` — any new day can merge old
+    clusters and move canonicals, so per-partition carry-over would be
+    wrong; the rewrite is one linear pass, the saved work is the
+    quadratic part. A crash inside replace's rename window leaves no
+    dup_clusters and no lineage row for the new snapshot, so the next
+    run rebuilds in ``full`` mode and its result is still correct.
 
     Output table dup_clusters: (url, warc_date, cluster_id,
     is_canonical, cluster_size). ``clusters`` in the summary counts
@@ -267,7 +270,10 @@ def run_global_dedup(spark: SparkSession, warehouse: str,
                 .select("id", "text")
                 .unionByName(docs.select("id", "text")
                              .join(pair_ids, "id", "left_semi"))
-                .dropDuplicates(["id", "text"]))
+                .dropDuplicates(["id", "text"])
+                # built once: the count, the LSH and the exact-hash
+                # edges all read this barrier
+                .localCheckpoint())
         lsh_docs = pool.count()
         new_edges = _neardup_edges(pool, n, num_hashes, bands,
                                    threshold, max_bucket_size)
@@ -291,17 +297,11 @@ def run_global_dedup(spark: SparkSession, warehouse: str,
                         (F.col("id") == F.col("label"))
                         .alias("is_canonical"),
                         "cluster_size"))
-    # full overwrite, THEN the lineage commit — same barrier as run().
-    # dup_clusters is also the delta baseline for the NEXT ingest, so
-    # stage through a temp dir: overwriting the parquet dir we are
-    # reading (delta mode) would corrupt the self-read.
-    # no leading underscore — Spark treats _-prefixed paths as hidden
-    tmp = catalog.path(f"dup_clusters.stage.{run_id}")
-    clusters.write.mode("overwrite").parquet(tmp)
-    spark.read.parquet(tmp).write.mode("overwrite") \
-        .parquet(catalog.path("dup_clusters"))
-    import shutil
-    shutil.rmtree(tmp, ignore_errors=True)
+    # whole-table replace, THEN the lineage commit — same barrier as
+    # run(). In delta mode `clusters` reads the dup_clusters it
+    # replaces; replace() writes a stage dir and swaps it in by rename,
+    # so the self-read is never overwritten and nothing is copied twice
+    catalog.replace(clusters, "dup_clusters")
 
     stats = catalog.read("dup_clusters").agg(
         F.count("*").alias("rows"),

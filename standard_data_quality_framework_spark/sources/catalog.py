@@ -4,15 +4,28 @@
 parquet: partitioned layout (``warc_date=.../``), an append-only
 lineage table via unique-file append (parquet part files with a
 run-scoped name → atomic visibility on rename-capable filesystems),
-and idempotent per-partition overwrite via Spark's dynamic
+idempotent per-partition overwrite via Spark's dynamic
 partitionOverwriteMode — used for pages_filtered AND the
 metrics/dropped_by_rule tables (keyed by stage × partition_key) so
-crash replays replace rather than double-count.
+crash replays replace rather than double-count — and a whole-table
+``replace`` by directory swap (dup_clusters).
+
+Layout contract: every write goes through one writer, ``_write``. It
+rebalances rows by the partition columns before the write
+(``df.hint("rebalance", ...)``, Iceberg's ``distribution-mode=hash``),
+so each partition gets one file per write instead of one per input
+task — AQE coalesces the small partitions into few tasks and splits a
+partition larger than its advisory size
+(``spark.sql.adaptive.advisoryPartitionSizeInBytes``) into several
+files, so a huge day never lands in one task. Every file is
+zstd-compressed parquet.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -40,17 +53,52 @@ class ParquetCatalog:
     def read(self, table: str) -> DataFrame:
         return self.spark.read.parquet(self.path(table))
 
-    def append(self, df: DataFrame, table: str,
+    @staticmethod
+    def _write(df: DataFrame, path: str, mode: str,
                partition_by: list[str] | None = None) -> None:
-        w = df.write.mode("append")
+        """The one parquet writer (see the module docstring's layout
+        contract). An overwrite is dynamic: it replaces only the
+        partitions ``df`` has rows for."""
+        if partition_by:
+            df = df.hint("rebalance", *partition_by)
+        w = (df.write.mode(mode).option("compression", "zstd")
+             .option("partitionOverwriteMode", "dynamic"))
         if partition_by:
             w = w.partitionBy(*partition_by)
-        w.parquet(self.path(table))
+        w.parquet(path)
+
+    def append(self, df: DataFrame, table: str,
+               partition_by: list[str] | None = None) -> None:
+        self._write(df, self.path(table), "append", partition_by)
 
     def overwrite_partitions(self, df: DataFrame, table: str,
                              partition_by: list[str]) -> None:
         """Idempotent per-partition overwrite (retry-safe commits)."""
-        (df.write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy(*partition_by)
-         .parquet(self.path(table)))
+        self._write(df, self.path(table), "overwrite", partition_by)
+
+    def replace(self, df: DataFrame, table: str) -> None:
+        """Replace the whole table with ``df``, which may read the table
+        itself: write ``<table>.stage.<tag>``, rename the live table to
+        ``<table>.old.<tag>``, rename the stage into place, remove the
+        old one. The table is written once and never read back.
+
+        A failed write or first rename leaves the live table as it was
+        (the stage is removed). A crash between the two renames leaves
+        no table at ``<table>``: a caller whose commit record is written
+        after ``replace`` (``run_global_dedup``'s lineage row) sees no
+        committed table on the next run and rebuilds it from scratch.
+        The stray ``.stage``/``.old`` directory of such a crash is not
+        read by anything. No leading underscore in those names: Spark
+        treats ``_``-prefixed paths as hidden."""
+        live = self.path(table)
+        tag = uuid.uuid4().hex[:12]
+        stage, old = f"{live}.stage.{tag}", f"{live}.old.{tag}"
+        try:
+            self._write(df, stage, "overwrite")
+            if os.path.isdir(live):
+                os.rename(live, old)
+        except BaseException:
+            shutil.rmtree(stage, ignore_errors=True)
+            raise
+        os.rename(stage, live)
+        shutil.rmtree(old, ignore_errors=True)

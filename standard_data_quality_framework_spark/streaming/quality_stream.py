@@ -1,9 +1,11 @@
 """Structured Streaming variant of the quality filter.
 
-Two entry points:
+Three entry points:
 
   run_streaming_filter — readStream over a pages directory →
-      foreachBatch(full batch pipeline) → partitioned parquet sink.
+      foreachBatch(full batch pipeline) → partitioned parquet sink,
+      written by the warehouse's writer (``ParquetCatalog``: one zstd
+      file per partition per epoch).
       foreachBatch is the right shape here because the verdict stage
       includes a per-crawl-day exact-dup aggregate+join: inside a
       micro-batch the same deterministic batch DAG applies. Exactly-once: the file
@@ -40,12 +42,15 @@ the supported path.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..pipeline import run_quality_filter
 from ..functions.udfs import make_udfs
+from ..sources.catalog import ParquetCatalog
 
 PAGES_SCHEMA = T.StructType([
     T.StructField("url", T.StringType()),
@@ -64,16 +69,17 @@ def run_streaming_filter(spark: SparkSession, input_dir: str,
     stream = (spark.readStream.schema(PAGES_SCHEMA)
               .option("maxFilesPerTrigger", "8")
               .parquet(input_dir))
+    # the sink is one catalog table, written by the warehouse's writer
+    out_dir = os.path.abspath(output_dir)
+    catalog = ParquetCatalog(spark, os.path.dirname(out_dir))
 
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
         out = run_quality_filter(spark, batch_df, udfs=udfs)
         # epoch-keyed idempotent rewrite: batch_id leads the partition
         # spec so a retry of epoch N touches only batch_id=N dirs
-        (out.kept.withColumn("batch_id", F.lit(epoch_id))
-         .write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("batch_id", "warc_date")
-         .parquet(output_dir))
+        catalog.overwrite_partitions(
+            out.kept.withColumn("batch_id", F.lit(epoch_id)),
+            os.path.basename(out_dir), ["batch_id", "warc_date"])
 
     writer = (stream.writeStream
               .foreachBatch(process_batch)

@@ -3,6 +3,8 @@
 from __future__ import annotations
 
 import math
+import os
+from collections import Counter
 
 import pandas as pd
 import pytest
@@ -13,6 +15,8 @@ from standard_data_quality_framework_spark.metrics import dimension_metrics
 from standard_data_quality_framework_spark.pipeline import run_quality_filter
 from standard_data_quality_framework_spark.runner import (run,
                                                            run_global_dedup)
+from standard_data_quality_framework_spark.sources.catalog import (
+    ParquetCatalog)
 
 
 def test_resume_processes_only_pending_dates(spark, pages_df, tmp_path):
@@ -360,3 +364,119 @@ def test_global_dedup_delta_member_sample(spark, tmp_path):
         out = spark.read.parquet(f"{wh}/dup_clusters").toPandas()
         cl = out.drop_duplicates("url").set_index("url")["cluster_id"]
         assert (cl["md3"] == "ma1") is expect_linked
+
+
+# ---------------------------------------------------------------------------
+# warehouse layout and whole-table replace (sources/catalog.py)
+# ---------------------------------------------------------------------------
+
+def _data_files(root):
+    return [os.path.join(r, f) for r, _d, fs in os.walk(root)
+            for f in fs if f.endswith(".parquet")]
+
+
+def test_catalog_one_zstd_file_per_partition(spark, pages_df, tmp_path):
+    """The sinks are rebalanced by their partition columns before the
+    write: every partition directory of a run holds ONE data file (not
+    one per writing task), and every column chunk is zstd."""
+    import pyarrow.parquet as pq
+    wh = str(tmp_path / "wh_layout")
+    run(spark, pages_df, wh, run_id="lay")
+    n_days = pages_df.select(F.to_date("warc_ts")).distinct().count()
+    for table in ("pages_filtered", "metrics", "dropped_by_rule"):
+        files = _data_files(f"{wh}/{table}")
+        per_dir = Counter(os.path.dirname(f) for f in files)
+        assert len(per_dir) == n_days, table
+        assert set(per_dir.values()) == {1}, (table, per_dir)
+        for f in files:
+            md = pq.ParquetFile(f).metadata
+            assert {md.row_group(i).column(j).compression
+                    for i in range(md.num_row_groups)
+                    for j in range(md.num_columns)} == {"ZSTD"}, f
+
+
+def test_catalog_replace_reads_the_table_it_replaces(spark, tmp_path):
+    cat = ParquetCatalog(spark, str(tmp_path / "wh_replace"))
+    cat.replace(spark.range(5).withColumn("v", F.col("id") * 10), "t")
+    extra = spark.createDataFrame([(5, 0)], "id long, v long")
+    cat.replace(cat.read("t").withColumn("v", F.col("v") + 1)
+                .unionByName(extra), "t")
+    assert sorted(map(tuple, cat.read("t").collect())) == [
+        (0, 1), (1, 11), (2, 21), (3, 31), (4, 41), (5, 0)]
+    # no stage or old directory left behind
+    assert os.listdir(cat.warehouse) == ["t"]
+
+
+def _clusters(spark, wh):
+    cols = ["url", "warc_date", "cluster_id", "is_canonical",
+            "cluster_size"]
+    return (spark.read.parquet(f"{wh}/dup_clusters").select(cols)
+            .toPandas().sort_values(["url", "warc_date"])
+            .reset_index(drop=True))
+
+
+def test_global_dedup_replace_failure_injection(spark, tmp_path,
+                                                monkeypatch):
+    """Crash injection into run_global_dedup's dup_clusters replace. A
+    failed stage write or first rename leaves the prior dup_clusters
+    readable and unchanged, with no stage dir and no lineage row for
+    the new snapshot; a failure between the two renames leaves no
+    dup_clusters, so the rerun rebuilds in full mode. Every rerun
+    equals a single-shot run."""
+    from standard_data_quality_framework_spark.sources import catalog
+    tmpl = "the exact template text one two three four five"
+    day12 = ([(f"a{i:02d}", 1, f"unique doc {i} " + _BASE[: 40 + i])
+              for i in range(5)]
+             + [("x1", 1, tmpl), ("x2", 2, tmpl),
+                ("w1", 1, _BASE), ("w2", 2, _BASE + " extra")])
+    day3 = [("z1", 3, tmpl), ("w3", 3, _BASE + " other"),
+            ("c01", 3, "third day doc " + _BASE[10: 60])]
+
+    def two_phase(wh):
+        _write_pages_filtered(spark, wh, day12)
+        run_global_dedup(spark, wh, run_id="p1", threshold=0.8)
+        _write_pages_filtered(spark, wh, day3, mode="append")
+
+    solo = str(tmp_path / "wh_solo")
+    two_phase(solo)
+    assert run_global_dedup(spark, solo, threshold=0.8)["mode"] \
+        == "delta-approx"
+    expected = _clusters(spark, solo)
+
+    real_rename = os.rename
+
+    def failing_rename(nth):
+        calls = []
+
+        def rename(src, dst):
+            calls.append(src)
+            if len(calls) == nth:
+                raise OSError("injected")
+            real_rename(src, dst)
+        return rename
+
+    def failing_write(*_a, **_k):
+        raise OSError("injected")
+
+    for point, target, attr, fake, rerun_mode in [
+            ("write", ParquetCatalog, "_write", staticmethod(failing_write),
+             "delta-approx"),
+            ("rename1", catalog.os, "rename", failing_rename(1),
+             "delta-approx"),
+            ("rename2", catalog.os, "rename", failing_rename(2), "full")]:
+        wh = str(tmp_path / f"wh_fail_{point}")
+        two_phase(wh)
+        prior = _clusters(spark, wh)
+        with monkeypatch.context() as m:
+            m.setattr(target, attr, fake)
+            with pytest.raises(OSError, match="injected"):
+                run_global_dedup(spark, wh, threshold=0.8)
+        if point == "rename2":
+            assert not os.path.exists(f"{wh}/dup_clusters")
+        else:
+            pd.testing.assert_frame_equal(_clusters(spark, wh), prior)
+            assert sorted(os.listdir(wh)) == [
+                "dup_clusters", "lineage", "pages_filtered"]
+        r = run_global_dedup(spark, wh, threshold=0.8)
+        assert not r["resumed"] and r["mode"] == rerun_mode, point
+        pd.testing.assert_frame_equal(_clusters(spark, wh), expected)
