@@ -23,6 +23,7 @@ zstd-compressed parquet.
 
 from __future__ import annotations
 
+import glob
 import os
 import shutil
 import uuid
@@ -87,10 +88,19 @@ class ParquetCatalog:
         no table at ``<table>``: a caller whose commit record is written
         after ``replace`` (``run_global_dedup``'s lineage row) sees no
         committed table on the next run and rebuilds it from scratch.
-        The stray ``.stage``/``.old`` directory of such a crash is not
-        read by anything. No leading underscore in those names: Spark
-        treats ``_``-prefixed paths as hidden."""
+
+        The catalog has one writer per table, so every
+        ``<table>.stage.*``/``<table>.old.*`` sibling found before the
+        write is a crash's leftover and is removed. That includes a
+        complete stage found while the live table is missing: it is
+        deleted, not swapped in, because its commit record was never
+        written — the caller's full rebuild is the recovery. No leading
+        underscore in those names: Spark treats ``_``-prefixed paths as
+        hidden."""
         live = self.path(table)
+        for stray in (glob.glob(f"{glob.escape(live)}.stage.*")
+                      + glob.glob(f"{glob.escape(live)}.old.*")):
+            shutil.rmtree(stray, ignore_errors=True)
         tag = uuid.uuid4().hex[:12]
         stage, old = f"{live}.stage.{tag}", f"{live}.old.{tag}"
         try:

@@ -68,6 +68,23 @@ def test_replay_overwrites_metrics_not_appends(spark, pages_df, tmp_path):
     # the surviving rows are the replay's, not a mix
     assert [r.run_id for r in mets.select("run_id").distinct().collect()] \
         == ["r2"]
+    # the written schemas (FIXTURES.md §3-§4); stage and partition_key
+    # of the partitioned tables are Hive directories, which a reader
+    # with partition type inference sees as string and date
+    assert mets.dtypes == [
+        ("dimension", "string"), ("score", "double"), ("rating", "int"),
+        ("docs_scanned", "bigint"), ("docs_dropped", "bigint"),
+        ("scrub_edit_count", "bigint"), ("explanation", "string"),
+        ("details", "map<string,string>"), ("run_id", "string"),
+        ("stage", "string"), ("partition_key", "date")]
+    assert spark.read.parquet(f"{wh}/dropped_by_rule").dtypes == [
+        ("rule", "string"), ("n_dropped", "bigint"), ("run_id", "string"),
+        ("stage", "string"), ("partition_key", "date")]
+    assert spark.read.parquet(f"{wh}/lineage").dtypes == [
+        ("run_id", "string"), ("stage", "string"),
+        ("partition_key", "string"), ("status", "string"),
+        ("rows_in", "bigint"), ("rows_out", "bigint"),
+        ("finished_ts", "timestamp")]
 
 
 def test_schema_presence_guard(spark, pages_df, tmp_path):
@@ -422,7 +439,7 @@ def test_global_dedup_replace_failure_injection(spark, tmp_path,
     readable and unchanged, with no stage dir and no lineage row for
     the new snapshot; a failure between the two renames leaves no
     dup_clusters, so the rerun rebuilds in full mode. Every rerun
-    equals a single-shot run."""
+    equals a single-shot run and leaves no stray directory behind."""
     from standard_data_quality_framework_spark.sources import catalog
     tmpl = "the exact template text one two three four five"
     day12 = ([(f"a{i:02d}", 1, f"unique doc {i} " + _BASE[: 40 + i])
@@ -480,3 +497,6 @@ def test_global_dedup_replace_failure_injection(spark, tmp_path,
         r = run_global_dedup(spark, wh, threshold=0.8)
         assert not r["resumed"] and r["mode"] == rerun_mode, point
         pd.testing.assert_frame_equal(_clusters(spark, wh), expected)
+        # the rerun's replace removed the crash's stray directories
+        assert sorted(os.listdir(wh)) == [
+            "dup_clusters", "lineage", "pages_filtered"], point
