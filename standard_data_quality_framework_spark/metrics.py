@@ -23,7 +23,10 @@ day row holds every counter once — the additive ones and the one
 non-additive one, count(DISTINCT url) — and the (day, lang_pred) rows
 hold the per-class doc counts that representativity folds. Each
 builder scans the verdicts once and joins nothing; map-side partial
-aggregation applies, no skew (dates are the partition key).
+aggregation applies, no skew (dates are the partition key). The runner
+persists the summary next to the verdicts, so its three writes (and
+its run counters) evaluate the aggregate once: Spark's cache manager
+serves each builder's identical ``_day_summary`` plan from it.
 """
 
 from __future__ import annotations

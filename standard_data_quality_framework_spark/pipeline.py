@@ -26,7 +26,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .config import N_URL_BUCKETS, RULES, STOPWORD_PATTERN
@@ -150,8 +150,7 @@ def with_verdict(df: DataFrame) -> DataFrame:
     # failed extraction is not "the same page" as an empty one. (Dead
     # on the standard paths, where etext is already coalesced
     # non-null, but with_verdict is callable on any signals frame.)
-    df = (df.withColumn("_vday", F.coalesce(F.to_date(F.col("warc_ts")),
-                                            F.to_date(F.lit("1970-01-01"))))
+    df = (df.withColumn("_vday", crawl_day())
             .withColumn("_vhash", F.md5(F.coalesce(F.col("etext"),
                                                    F.lit("\x00<null>"))))
             .localCheckpoint(eager=False))
@@ -180,11 +179,18 @@ def with_verdict(df: DataFrame) -> DataFrame:
 # Partitioning / skew helpers
 # ---------------------------------------------------------------------------
 
+def crawl_day() -> Column:
+    """A page's crawl day: the date of ``warc_ts``, or the sentinel
+    1970-01-01 when it is NULL (verdict groups, sinks, resume)."""
+    return F.coalesce(F.to_date(F.col("warc_ts")),
+                      F.to_date(F.lit("1970-01-01")))
+
+
 def with_partition_cols(df: DataFrame) -> DataFrame:
-    """Iceberg-style partition transform columns: days(warc_ts) +
-    bucket(N, url). The sinks partition by ``warc_date`` only;
-    ``url_bucket`` is written as a plain data column."""
-    return (df.withColumn("warc_date", F.to_date("warc_ts"))
+    """Iceberg-style partition transform columns: ``crawl_day()`` (days
+    of warc_ts, 1970-01-01 when NULL) + bucket(N, url). The sinks
+    partition by ``warc_date`` only; ``url_bucket`` is a data column."""
+    return (df.withColumn("warc_date", crawl_day())
               .withColumn("url_bucket",
                           F.pmod(F.xxhash64("url"), F.lit(N_URL_BUCKETS))
                           .cast("int")))

@@ -16,7 +16,10 @@ a crash after the metrics write but before the lineage commit cannot
 double-count. On restart we anti-join the input's warc_dates against
 completed lineage rows for this stage and re-process only the
 remainder. (Duplicate 'done' lineage rows from a crash mid-append are
-harmless: pending_dates reads the distinct partition_key set.)
+harmless: pending_dates reads the distinct partition_key set.) A page
+without a warc_ts is filtered, counted and resumed under
+``pipeline.crawl_day()``'s sentinel day 1970-01-01. The run's counters
+come from the persisted day summary that the three summary sinks read.
 """
 
 from __future__ import annotations
@@ -27,27 +30,33 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .metrics import dimension_metrics, dropped_by_rule, lineage_rows
+from .metrics import (_day_summary, dimension_metrics, dropped_by_rule,
+                      lineage_rows)
 from .operators.dedup import connected_components
-from .pipeline import kept_pages, run_quality_filter, with_partition_cols
+from .pipeline import crawl_day, kept_pages, run_quality_filter
 from .sources.catalog import ParquetCatalog
 
 STAGE = "quality_filter"
 GLOBAL_DEDUP_STAGE = "global_dedup"
 
 
+def _done_keys(catalog: ParquetCatalog, stage: str) -> DataFrame:
+    """Distinct ``partition_key`` of the stage's done lineage rows; before
+    the first commit an empty relation the optimizer folds away."""
+    if not catalog.exists("lineage"):
+        return catalog.spark.sql(
+            "SELECT CAST(NULL AS STRING) AS partition_key WHERE false")
+    return (catalog.read("lineage")
+            .filter((F.col("stage") == stage) & (F.col("status") == "done"))
+            .select("partition_key").distinct())
+
+
 def pending_dates(catalog: ParquetCatalog, pages: DataFrame) -> DataFrame:
     """Distinct input warc_dates minus already-completed lineage rows."""
-    all_dates = (with_partition_cols(pages.select("warc_ts", "url"))
-                 .select("warc_date").distinct())
-    if not catalog.exists("lineage"):
-        return all_dates
-    done = (catalog.read("lineage")
-            .filter((F.col("stage") == STAGE)
-                    & (F.col("status") == "done"))
-            .select(F.col("partition_key").cast("date").alias("warc_date"))
-            .distinct())
-    return all_dates.join(done, "warc_date", "left_anti")
+    done = _done_keys(catalog, STAGE).select(
+        F.col("partition_key").cast("date").alias("warc_date"))
+    return (pages.select(crawl_day().alias("warc_date")).distinct()
+            .join(done, "warc_date", "left_anti"))
 
 
 def run(spark: SparkSession, pages: DataFrame, warehouse: str,
@@ -59,37 +68,22 @@ def run(spark: SparkSession, pages: DataFrame, warehouse: str,
     # schema-presence check against the use-case contract
     # (config.EXPECTED_PAGE_COLUMNS) — a set difference, no Spark job
     from .config import EXPECTED_PAGE_COLUMNS as expected
-    have = set(pages.columns)
-    missing = [c for c in expected if c not in have]
+    missing = [c for c in expected if c not in pages.columns]
     if missing:
         raise ValueError(
             f"input is missing expected columns: {','.join(missing)} "
             f"(schema presence {round(1 - len(missing) / len(expected), 6)})")
 
-    todo = pending_dates(catalog, pages)
-    n_dates = todo.count()
-    if n_dates == 0:
+    dates = [r.warc_date for r in pending_dates(catalog, pages).collect()]
+    if not dates:
         return {"run_id": run_id, "dates_processed": 0, "resumed": True,
                 "schema_presence": 1.0}
 
-    # restrict input to pending partitions (broadcast the small date set
-    # — partition pruning at the scan on a real Iceberg table)
-    pages_todo = (with_partition_cols(pages)
-                  .join(F.broadcast(todo), "warc_date", "left_semi")
-                  .drop("warc_date", "url_bucket"))
-
-    out = run_quality_filter(spark, pages_todo)
-    # cheap run-level counters ride along with the first action via
-    # observe() (A19 summary-stats pattern — no extra pass)
-    from pyspark.sql import Observation
-    obs = Observation(f"qf_{run_id}")
-    observed = out.verdicts.observe(
-        obs,
-        F.count(F.lit(1)).alias("docs_scanned"),
-        F.sum(F.when(F.col("keep"), 1).otherwise(0)).alias("docs_kept"),
-        F.sum(F.col("scrub_edits").cast("long")).alias("scrub_edits"))
-    # one materialization of the verdict frame feeds all four sinks
-    verdicts = observed.persist()
+    out = run_quality_filter(spark, pages.filter(crawl_day().isin(dates)))
+    # one materialization of the verdicts feeds all four sinks, one of the
+    # day summary the three builders (the cache manager matches its plan)
+    verdicts = out.verdicts.persist()
+    summary = _day_summary(verdicts).persist()
     try:
         catalog.overwrite_partitions(kept_pages(verdicts), "pages_filtered",
                                      ["warc_date"])
@@ -107,14 +101,18 @@ def run(spark: SparkSession, pages: DataFrame, warehouse: str,
         catalog.overwrite_partitions(dbr, "dropped_by_rule",
                                      ["stage", "partition_key"])
 
-        # lineage commit LAST — the resume barrier
-        lin = lineage_rows(verdicts, run_id, STAGE)
+        # lineage commit LAST — the resume barrier — as one file: the
+        # cached summary keeps one partition per shuffle partition
+        lin = lineage_rows(verdicts, run_id, STAGE).coalesce(1)
         catalog.append(lin, "lineage")
 
-        counters = dict(obs.get)
+        counters = summary.filter("_day = 1").selectExpr(
+            "sum(docs_scanned) AS docs_scanned", "sum(docs_kept) AS docs_kept",
+            "sum(scrub_edit_count) AS scrub_edits").first().asDict()
     finally:
+        summary.unpersist()
         verdicts.unpersist()
-    return {"run_id": run_id, "dates_processed": n_dates,
+    return {"run_id": run_id, "dates_processed": len(dates),
             "rows_in": counters["docs_scanned"],
             "rows_kept": counters["docs_kept"], "resumed": False,
             "observed": counters,
@@ -223,12 +221,7 @@ def run_global_dedup(spark: SparkSession, warehouse: str,
 
     # day set = the snapshot identity
     days, snap = _snapshot(pages)
-    done = set()
-    if catalog.exists("lineage"):
-        done = {r[0] for r in catalog.read("lineage")
-                .filter((F.col("stage") == GLOBAL_DEDUP_STAGE)
-                        & (F.col("status") == "done"))
-                .select("partition_key").distinct().collect()}
+    done = {r[0] for r in _done_keys(catalog, GLOBAL_DEDUP_STAGE).collect()}
     if snap in done:
         return {"run_id": run_id, "snapshot": snap, "resumed": True}
 

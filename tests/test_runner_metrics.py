@@ -61,13 +61,14 @@ def test_replay_overwrites_metrics_not_appends(spark, pages_df, tmp_path):
     m1 = spark.read.parquet(f"{wh}/metrics").count()
     d1 = spark.read.parquet(f"{wh}/dropped_by_rule").count()
     shutil.rmtree(f"{wh}/lineage")
-    run(spark, pages_df, wh, run_id="r2")
+    r2 = run(spark, pages_df, wh, run_id="r2")
     mets = spark.read.parquet(f"{wh}/metrics")
     assert mets.count() == m1
     assert spark.read.parquet(f"{wh}/dropped_by_rule").count() == d1
     # the surviving rows are the replay's, not a mix
     assert [r.run_id for r in mets.select("run_id").distinct().collect()] \
         == ["r2"]
+    _assert_counters_match_sinks(spark, wh, r2)
     # the written schemas (FIXTURES.md §3-§4); stage and partition_key
     # of the partitioned tables are Hive directories, which a reader
     # with partition type inference sees as string and date
@@ -85,6 +86,123 @@ def test_replay_overwrites_metrics_not_appends(spark, pages_df, tmp_path):
         ("partition_key", "string"), ("status", "string"),
         ("rows_in", "bigint"), ("rows_out", "bigint"),
         ("finished_ts", "timestamp")]
+
+
+def _assert_counters_match_sinks(spark, wh, r):
+    """The run's returned counters equal what its sinks recorded: rows
+    in/kept = summed lineage rows_in/rows_out, scrub edits = summed
+    scrub_edit_count of the overall metrics rows."""
+    mine = F.col("run_id") == r["run_id"]
+    lin = spark.read.parquet(f"{wh}/lineage").filter(mine).agg(
+        F.sum("rows_in"), F.sum("rows_out")).first()
+    assert (r["rows_in"], r["rows_kept"]) == tuple(lin)
+    edits = (spark.read.parquet(f"{wh}/metrics")
+             .filter(mine & (F.col("dimension") == "overall"))
+             .agg(F.sum("scrub_edit_count")).first()[0])
+    assert r["observed"]["scrub_edits"] == edits
+
+
+def _small_pages(spark, tmp_path, null_ts_url=None):
+    """A parquet copy of make_pages(n=60, seed=7), read back; the page
+    at ``null_ts_url`` loses its warc_ts."""
+    from standard_data_quality_framework_spark.fixtures import (
+        write_pages_parquet)
+    src = write_pages_parquet(str(tmp_path / "src.parquet"), n=60, seed=7)
+    df = spark.read.parquet(src)
+    if null_ts_url is not None:
+        df = df.withColumn("warc_ts", F.when(F.col("url") != null_ts_url,
+                                             F.col("warc_ts")))
+    dst = str(tmp_path / "pages.parquet")
+    df.write.parquet(dst)
+    return spark.read.parquet(dst)
+
+
+def test_null_warc_ts_filed_counted_and_resumed_under_sentinel_day(
+        spark, tmp_path):
+    # a page without a timestamp is filtered, counted and resumed under
+    # crawl_day()'s sentinel day, the day its verdict groups it in
+    import datetime as dt
+    url = "https://bigsite.example/page/7/0000000"  # a page the filter keeps
+    pages = _small_pages(spark, tmp_path, null_ts_url=url)
+    assert pages.filter(F.col("warc_ts").isNull()).count() == 1
+    wh = str(tmp_path / "wh")
+    r = run(spark, pages, wh, run_id="n1")
+    assert r["rows_in"] == 60
+    _assert_counters_match_sinks(spark, wh, r)
+
+    sentinel = dt.date(1970, 1, 1)
+    lin = spark.read.parquet(f"{wh}/lineage").filter(
+        F.col("partition_key") == str(sentinel)).collect()
+    assert [(x.rows_in, x.rows_out) for x in lin] == [(1, 1)]
+    mets = spark.read.parquet(f"{wh}/metrics").filter(
+        F.col("partition_key") == F.lit(sentinel))
+    assert mets.filter("dimension = 'overall'").first().docs_scanned == 1
+    kept = [x.url for x in spark.read.parquet(f"{wh}/pages_filtered")
+            .filter(F.col("warc_date") == F.lit(sentinel)).collect()]
+    assert kept == [url]
+
+    again = run(spark, pages, wh, run_id="n2")
+    assert again["resumed"] and again["dates_processed"] == 0
+
+
+def test_run_with_no_page_kept(spark, tmp_path):
+    import datetime as dt
+    rows = [("u_empty", dt.datetime(2024, 1, 1, 3), None, "", "en"),
+            ("u_short", dt.datetime(2024, 1, 1, 5), None, "two words", "en"),
+            ("u_null", dt.datetime(2024, 1, 2, 7), None, None, None),
+            ("u_sym", dt.datetime(2024, 1, 2, 9), None, "### ... ###", "en")]
+    pages = spark.createDataFrame(
+        rows, "url string, warc_ts timestamp, html binary, text string, "
+        "lang string")
+    wh = str(tmp_path / "wh")
+    r = run(spark, pages, wh, run_id="z1")
+    assert (r["rows_in"], r["rows_kept"], r["dates_processed"]) == (4, 0, 2)
+    _assert_counters_match_sinks(spark, wh, r)
+
+    verdicts = run_quality_filter(spark, pages).verdicts
+    assert verdicts.filter("keep").count() == 0
+    want = Counter((str(v.warc_date), rule) for v in verdicts.collect()
+                   for rule in v.drop_reasons)
+    got = {(str(x.partition_key), x.rule): x.n_dropped for x in
+           spark.read.parquet(f"{wh}/dropped_by_rule")
+           .filter("run_id = 'z1'").collect()}
+    assert got == dict(want)
+
+    again = run(spark, pages, wh, run_id="z2")
+    assert again["resumed"] and again["dates_processed"] == 0
+
+
+def _plan_node_names(plan) -> list[str]:
+    names, todo = [], [plan]
+    while todo:
+        node = todo.pop()
+        names.append(node.nodeName())
+        kids = node.children()
+        todo.extend(kids.apply(i) for i in range(kids.size()))
+    return names
+
+
+def test_run_evaluates_the_day_summary_once(spark, tmp_path, monkeypatch):
+    # the metrics, dropped_by_rule and lineage frames read the runner's
+    # persisted day summary: their plans, with cached data substituted,
+    # hold no aggregate of their own
+    real_write = ParquetCatalog._write
+    nodes = {}
+
+    def capturing_write(df, path, mode, partition_by=None):
+        table = os.path.basename(path)
+        if table in ("metrics", "dropped_by_rule", "lineage"):
+            nodes[table] = _plan_node_names(
+                df._jdf.queryExecution().withCachedData())
+        real_write(df, path, mode, partition_by)
+
+    monkeypatch.setattr(ParquetCatalog, "_write",
+                        staticmethod(capturing_write))
+    run(spark, _small_pages(spark, tmp_path), str(tmp_path / "wh"))
+    assert sorted(nodes) == ["dropped_by_rule", "lineage", "metrics"]
+    for table, names in nodes.items():
+        assert "InMemoryRelation" in names, (table, names)
+        assert "Aggregate" not in names, (table, names)
 
 
 def test_schema_presence_guard(spark, pages_df, tmp_path):
