@@ -27,7 +27,7 @@ ratio (quality_checks.py:245-275), O(k²)→O(k) fingerprinting
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from ..functions.hashing import (MERSENNE31, hash60, minhash_coeffs)
@@ -416,71 +416,67 @@ def connected_components(nodes: DataFrame, edges: DataFrame,
                          max_iter: int = 25) -> DataFrame:
     """(id, label) for every id in ``nodes`` — label = min node id
     reachable through ``edges`` (columns id_a/id_b, both ends in
-    ``nodes``), i.e. the canonical member of each duplicate cluster.
-    Propagation runs over the edge-incident ids only (the duplicate
-    subgraph); every other id keeps label = id through the final left
-    join, so at 10^12 docs the iterative frame stays dup-subgraph-sized.
+    ``nodes``; pairs may repeat or point both ways), i.e. the canonical
+    member of each duplicate cluster. Propagation runs over the
+    edge-incident ids only; every other id keeps label = id through the
+    final left join, so at 10^12 docs the iterative frame stays
+    dup-subgraph-sized.
 
-    Min-label propagation: each round every node adopts the minimum of
-    its own and its neighbours' labels — converges in O(component
-    diameter) rounds (duplicate clusters are near-cliques from LSH, so
-    usually 2-3). Each round is one shuffle join on uniform ids;
-    ``localCheckpoint`` truncates the growing lineage so round N+1
-    reads round N's materialized blocks instead of replaying the whole
-    history. The per-round convergence count is a scalar action, not a
-    data collect. This is the standard scalable CC (GraphFrames/
-    Pregel-style), replacing the reference's in-memory pandas
-    ``duplicated()`` global scan (quality_checks.py:245-275) at sizes
-    where the dataset does not fit one machine.
+    Min-label propagation: each round every node adopts the min label
+    of its closed neighbourhood. The symmetric edge list gives each
+    node one self-loop, so a round is ONE shuffle join (edges ⋈ labels)
+    and ONE aggregate, whose self-loop row is also the old label for
+    the convergence count; the first labels need only the aggregate.
+    After round r a node holds the min id within r + 1 hops, so the
+    loop converges within ``max_iter`` rounds iff no node is more than
+    ``max_iter`` hops from its component's min id — always when the
+    diameter ≤ max_iter (LSH clusters are near-cliques: 1-2 rounds).
+    ``localCheckpoint`` truncates the lineage so round N+1 reads round
+    N's materialized blocks. This is the standard scalable CC
+    (GraphFrames/Pregel-style), replacing the reference's in-memory
+    pandas ``duplicated()`` global scan (quality_checks.py:245-275) at
+    sizes where the dataset does not fit one machine.
     """
-    # the symmetric edge list in ONE pass over the edge plan (explode
-    # both directions of each row), materialized once: the seed labels
-    # and every propagation round read this checkpoint, never the
-    # (potentially expensive) pair-generation plan that produced it
-    sym = (edges.select(F.explode(F.array(
-        F.struct(F.col("id_a").alias("src"), F.col("id_b").alias("dst")),
-        F.struct(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))))
-        .alias("e"))
+    # the deduplicated symmetric edge list plus self-loops in ONE pass
+    # over the edge plan, materialized once: every round reads this
+    # checkpoint, never the (potentially expensive) pair-generation
+    # plan. The only dedup of the edges: callers pass repeats as is
+    sym = (edges.select(F.explode(F.array(*(
+        F.struct(F.col(s).alias("src"), F.col(d).alias("dst"))
+        for s, d in [("id_a", "id_b"), ("id_b", "id_a"),
+                     ("id_a", "id_a"), ("id_b", "id_b")]))).alias("e"))
         .select("e.src", "e.dst")
+        .distinct()
         .localCheckpoint())
-    labels = (sym.select(F.col("src").alias("id"),
-                         F.col("src").alias("label"))
-              .distinct().localCheckpoint())
-    from pyspark.sql import Observation
+    # read once, by the first round's join: no checkpoint
+    labels = sym.groupBy(F.col("src").alias("id")).agg(
+        F.min("dst").alias("label"))
     for i in range(max_iter):
-        neigh = (sym.join(labels, sym.dst == labels.id)
-                 .groupBy("src").agg(F.min("label").alias("nlabel")))
-        # convergence count rides the SAME job as the propagation via
-        # observe() — the previous new-vs-old join+count per round
-        # doubled the job count (measured 10s → 5s CC on a 700-edge
-        # template subgraph)
+        # the convergence count rides the round's own job (observe)
         obs = Observation(f"cc_{i}")
-        new = (labels.join(neigh, labels.id == neigh.src, "left")
-               .select(labels.id, F.col("label").alias("_old"),
-                       F.least(F.col("label"),
-                               F.coalesce("nlabel", F.col("label")))
-                       .alias("label"))
-               .observe(obs, F.sum((F.col("label") != F.col("_old"))
-                                   .cast("long")).alias("chg"))
-               .select("id", "label")
-               .localCheckpoint())
+        labels = (sym.join(labels, sym.dst == labels.id)
+                  .groupBy(F.col("src").alias("id"))
+                  .agg(F.min("label").alias("label"),
+                       F.min(F.when(F.col("src") == F.col("dst"),
+                                    F.col("label"))).alias("_old"))
+                  .observe(obs, F.sum((F.col("label") != F.col("_old"))
+                                      .cast("long")).alias("chg"))
+                  .select("id", "label")
+                  .localCheckpoint())
         changed = int(obs.get["chg"] or 0)
-        labels = new
         if changed == 0:
             break
     else:
-        # exiting by exhaustion with changed > 0 breaks the documented
-        # 'label = min reachable id' invariant (and downstream
-        # is_canonical) — never return partial labels silently
+        # partial labels break 'label = min reachable id' (and
+        # is_canonical downstream): never return them silently
         import warnings
         warnings.warn(
             f"connected_components did not converge in {max_iter} "
             f"iterations ({changed} labels still changing); labels are "
             "PARTIAL — raise max_iter for graphs with diameter > "
             f"{max_iter}", RuntimeWarning, stacklevel=2)
-    # NOTE: sym and the per-round labels are localCheckpoint'ed
-    # (RDD-level persistence; Dataset.unpersist is a no-op on them) —
-    # the ContextCleaner reclaims their blocks once unreferenced.
+    # sym and the labels are localCheckpoint'ed (RDD-level; unpersist is
+    # a no-op): the ContextCleaner reclaims them once unreferenced
     return (nodes.join(labels, "id", "left")
             .select("id", F.coalesce("label", "id").alias("label")))
 

@@ -122,7 +122,7 @@ def run(spark: SparkSession, pages: DataFrame, warehouse: str,
 def _neardup_edges(docs: DataFrame, n: int, num_hashes: int, bands: int,
                    threshold: float, max_bucket_size: int | None) -> DataFrame:
     """(id_a, id_b) near-dup edges = MinHash-LSH verified pairs ∪
-    exact-duplicate star edges.
+    exact-duplicate star edges; a pair found by both may repeat.
 
     The exact-hash union is the hot-bucket cap's other half: the cap
     drops band buckets above ``max_bucket_size`` from LSH candidate
@@ -141,7 +141,7 @@ def _neardup_edges(docs: DataFrame, n: int, num_hashes: int, bands: int,
              .filter(F.col("is_dup"))
              .select(F.col("kept_id").alias("id_a"),
                      F.col("id").alias("id_b")))
-    return lsh.unionByName(exact).distinct()
+    return lsh.unionByName(exact)
 
 
 # perfbench/trace.py times the CC layer under this name
@@ -174,8 +174,9 @@ def run_global_dedup(spark: SparkSession, warehouse: str,
     representative (the canonical url) of every prior cluster — and
     the new edges are merged with the prior clusters' star edges
     (member → canonical) before a CC pass over the affected subgraph.
-    Per ingested day that is O(new ∪ canonicals) LSH work instead of
-    O(all history). This is an APPROXIMATION of a from-scratch run
+    Every prior singleton is its own canonical, so the pool shrinks
+    only by history's duplicates: with few of them it is O(history),
+    not O(new day). This is an APPROXIMATION of a from-scratch run
     (reported as mode='delta-approx'): a new doc within threshold of
     a prior NON-canonical member but not of that cluster's canonical
     is missed, and two prior clusters merge only if a new doc (or
@@ -206,10 +207,13 @@ def run_global_dedup(spark: SparkSession, warehouse: str,
     Output table dup_clusters: (url, warc_date, cluster_id,
     is_canonical, cluster_size). ``clusters`` in the summary counts
     DISTINCT cluster ids (a canonical url kept on multiple days is
-    one cluster, not one per day).
+    one cluster, not one per day). No kept page: nothing is written.
     """
     run_id = run_id or uuid.uuid4().hex[:12]
     catalog = ParquetCatalog(spark, warehouse)
+    if not catalog.exists("pages_filtered"):
+        return {"run_id": run_id, "resumed": False,
+                "rows": 0, "clusters": 0, "dup_rows": 0}
     pages = catalog.read("pages_filtered")
 
     def _snapshot(frame: DataFrame) -> tuple[list[str], str]:
@@ -241,8 +245,7 @@ def run_global_dedup(spark: SparkSession, warehouse: str,
             new_days = sorted(set(days) - set(prior_days))
 
     if mode == "delta":
-        canon_ids = (prior.filter(F.col("is_canonical"))
-                     .select(F.col("url").alias("id")).distinct())
+        canon_ids = prior.filter("is_canonical").selectExpr("url AS id")
         pair_ids = canon_ids
         if delta_member_sample > 0:
             # bounded sample of NON-canonical members per prior cluster
@@ -257,7 +260,7 @@ def run_global_dedup(spark: SparkSession, warehouse: str,
                           .withColumn("_rk", F.row_number().over(wm))
                           .filter(F.col("_rk") <= delta_member_sample)
                           .select(F.col("url").alias("id")))
-            pair_ids = canon_ids.unionByName(member_ids).distinct()
+            pair_ids = canon_ids.unionByName(member_ids)
         pool = (docs.filter(F.col("warc_date").cast("string")
                             .isin(new_days))
                 .select("id", "text")
@@ -272,9 +275,8 @@ def run_global_dedup(spark: SparkSession, warehouse: str,
                                    threshold, max_bucket_size)
         prior_star = (prior.filter(F.col("url") != F.col("cluster_id"))
                       .select(F.col("cluster_id").alias("id_a"),
-                              F.col("url").alias("id_b"))
-                      .distinct())
-        edges = new_edges.unionByName(prior_star).distinct()
+                              F.col("url").alias("id_b")))
+        edges = new_edges.unionByName(prior_star)
     else:
         lsh_docs = all_ids.count()
         edges = _neardup_edges(docs, n, num_hashes, bands,

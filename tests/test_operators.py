@@ -593,17 +593,36 @@ def test_connected_components_evaluates_edges_once(spark):
 
     counted = F.udf(_count, LongType())
     ids = spark.range(10).select("id")
-    # chain 7-3-5 plus the pair 1-8; 0, 2, 4, 6, 9 are singletons
-    edges = (spark.createDataFrame([(7, 3), (3, 5), (1, 8)],
-                                   "a long, b long")
+    # chain 7-3-5 plus the pair 1-8; 0, 2, 4, 6, 9 are singletons; the
+    # reversed (3, 7) and the self-edge (8, 8) change no label
+    rows = [(7, 3), (3, 5), (1, 8), (3, 7), (8, 8)]
+    edges = (spark.createDataFrame(rows, "a long, b long")
              .select(counted("a").alias("id_a"), F.col("b").alias("id_b")))
     got = dict(dedup.connected_components(ids, edges).collect())
-    assert acc.value == 3
+    assert acc.value == len(rows)
     assert got == {0: 0, 1: 1, 2: 2, 3: 3, 4: 4, 5: 3, 6: 6, 7: 3,
                    8: 1, 9: 9}
     none = spark.createDataFrame([], "id_a long, id_b long")
     got = dict(dedup.connected_components(ids, none).collect())
     assert got == {i: i for i in range(10)}
+
+
+def test_connected_components_rounds_equal_the_distance_to_the_min(spark):
+    """On the path 0-1-…-6 every node is within 6 hops of the min id 0:
+    six rounds converge without a warning, five leave labels partial."""
+    import warnings
+    ids = spark.range(7).select("id")
+    path = spark.createDataFrame([(i, i + 1) for i in range(6)],
+                                 "id_a long, id_b long")
+    with warnings.catch_warnings(record=True) as seen:
+        warnings.simplefilter("always")
+        got = dict(dedup.connected_components(ids, path, max_iter=6)
+                   .collect())
+    assert got == {i: 0 for i in range(7)}
+    assert not [w for w in seen if issubclass(w.category, RuntimeWarning)
+                and "did not converge" in str(w.message)]
+    with pytest.warns(RuntimeWarning, match="did not converge in 5"):
+        dedup.connected_components(ids, path, max_iter=5).collect()
 
 
 def test_template_clusters_synthetic_family(spark):

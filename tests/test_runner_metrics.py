@@ -255,6 +255,30 @@ def test_global_dedup_cross_day_clusters_and_resume(spark, pages_df,
     assert c2.filter(~F.col("is_canonical")).count() >= 5
 
 
+def test_global_dedup_of_a_warehouse_with_no_kept_page(spark, tmp_path):
+    # pages_filtered holds no parquet file: nothing to cluster, nothing
+    # written; the first dedup after a run that keeps pages is full
+    import datetime as dt
+    pages = spark.createDataFrame(
+        [(f"u{i}", dt.datetime(2024, 3, i + 1, 4), None, "word", "en")
+         for i in range(2)],
+        "url string, warc_ts timestamp, html binary, text string, "
+        "lang string")
+    wh = str(tmp_path / "wh")
+    assert run(spark, pages, wh, run_id="e1")["rows_kept"] == 0
+    r = run_global_dedup(spark, wh, run_id="ge1")
+    assert (r["resumed"], r["rows"], r["clusters"], r["dup_rows"]) \
+        == (False, 0, 0, 0)
+    catalog = ParquetCatalog(spark, wh)
+    assert not catalog.exists("dup_clusters")
+    assert catalog.read("lineage").filter(
+        F.col("stage") == "global_dedup").count() == 0
+
+    assert run(spark, _small_pages(spark, tmp_path), wh,
+               run_id="e2")["rows_kept"] > 0
+    assert run_global_dedup(spark, wh, run_id="ge2")["mode"] == "full"
+
+
 def test_metrics_dimensions_and_ratings(spark, pages_df):
     out = run_quality_filter(spark, pages_df)
     verdicts = out.verdicts.withColumn("warc_date", F.to_date("warc_ts"))
