@@ -31,7 +31,10 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--cores", type=int, default=None,
                    help="local[N] cores (omit on a real cluster)")
     p.add_argument("--streaming", action="store_true",
-                   help="incremental mode via Structured Streaming")
+                   help="incremental mode via Structured Streaming, "
+                        "into the warehouse's own pages_filtered_stream "
+                        "table (batch_id × warc_date), not the batch "
+                        "run's pages_filtered")
     p.add_argument("--global-dedup", action="store_true",
                    help="cross-day near-dup clustering over the "
                         "warehouse's pages_filtered → dup_clusters")
@@ -51,7 +54,7 @@ def main(argv: list[str] | None = None) -> int:
         from standard_data_quality_framework_spark.streaming.quality_stream \
             import run_streaming_filter
         q = run_streaming_filter(
-            spark, args.input, f"{args.warehouse}/pages_filtered",
+            spark, args.input, f"{args.warehouse}/pages_filtered_stream",
             f"{args.warehouse}/_checkpoints", trigger_once=True)
         q.awaitTermination()
         print(json.dumps({"mode": "streaming", "status": "done"}))

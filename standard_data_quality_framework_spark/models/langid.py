@@ -67,14 +67,6 @@ class LangIdModel:
         k = int(np.argmax(scores))
         return (self.langs[k], float(p[k]))
 
-    def predict_many(self, texts) -> tuple[list[str], list[float]]:
-        langs, confs = [], []
-        for t in texts:
-            l, c = self.predict_one(t if isinstance(t, str) else "")
-            langs.append(l)
-            confs.append(c)
-        return langs, confs
-
 
 def train_langid(langs: list[str] | None = None,
                  n_sentences: int = 400) -> LangIdModel:

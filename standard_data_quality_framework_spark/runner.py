@@ -169,11 +169,11 @@ def run_global_dedup(spark: SparkSession, warehouse: str,
 
     Incremental (delta) mode — the 10^12-doc continuous-ingest path:
     when the existing ``dup_clusters`` covers a strict subset of the
-    current day set (confirmed by its own done lineage row), only the
-    NEW days' docs are paired — against themselves and against one
-    representative (the canonical url) of every prior cluster — and
-    the new edges are merged with the prior clusters' star edges
-    (member → canonical) before a CC pass over the affected subgraph.
+    current day set, only the NEW days' docs are paired — against
+    themselves and against one representative (the canonical url) of
+    every prior cluster — and the new edges are merged with the prior
+    clusters' star edges (member → canonical) before a CC pass over
+    the affected subgraph.
     Every prior singleton is its own canonical, so the pool shrinks
     only by history's duplicates: with few of them it is O(history),
     not O(new day). This is an APPROXIMATION of a from-scratch run
@@ -191,18 +191,20 @@ def run_global_dedup(spark: SparkSession, warehouse: str,
     ``incremental=False`` (``spark_submit_main.py --full-dedup``)
     rebuilds from scratch.
 
-    Resume contract: the unit of work is the SNAPSHOT — the sorted set
-    of warc_dates present in pages_filtered, fingerprinted into
-    ``partition_key``. A lineage row (stage=global_dedup, that key,
-    done) means dup_clusters is already current for exactly this day
-    set; re-running is a no-op, and adding a day changes the key so
-    the job re-runs (full or delta). The dup_clusters write is a
-    whole-table ``catalog.replace`` — any new day can merge old
-    clusters and move canonicals, so per-partition carry-over would be
-    wrong; the rewrite is one linear pass, the saved work is the
-    quadratic part. A crash inside replace's rename window leaves no
-    dup_clusters and no lineage row for the new snapshot, so the next
-    run rebuilds in ``full`` mode and its result is still correct.
+    Resume contract: the table is the commit. The unit of work is the
+    day set of pages_filtered; ``catalog.replace`` only ever swaps in
+    a complete dup_clusters, so the days dup_clusters holds are the
+    days it covers. Equal day sets: the run is a no-op (``resumed``).
+    A strict subset: delta (when ``incremental``). Anything else,
+    including no table: full. The dup_clusters write is a whole-table
+    replace — any new day can merge old clusters and move canonicals,
+    so per-partition carry-over would be wrong; the rewrite is one
+    linear pass, the saved work is the quadratic part. A crash between
+    replace's two renames leaves no dup_clusters, so the next run is
+    ``full``. The lineage row (stage=global_dedup, ``partition_key`` =
+    md5 prefix of the sorted day set, reported as ``snapshot``) is a
+    run record appended after the replace and never read back: a lost
+    append leaves the run committed, and the next run is ``resumed``.
 
     Output table dup_clusters: (url, warc_date, cluster_id,
     is_canonical, cluster_size). ``clusters`` in the summary counts
@@ -216,35 +218,26 @@ def run_global_dedup(spark: SparkSession, warehouse: str,
                 "rows": 0, "clusters": 0, "dup_rows": 0}
     pages = catalog.read("pages_filtered")
 
-    def _snapshot(frame: DataFrame) -> tuple[list[str], str]:
-        # (sorted day set, its md5) — one tiny row per day, not a data
-        # collect (a partition listing on a real Iceberg table)
-        days = sorted(str(r[0]) for r in
+    def _days(frame: DataFrame) -> list[str]:
+        return sorted(str(r[0]) for r in
                       frame.select("warc_date").distinct().collect())
-        return days, hashlib.md5(",".join(days).encode()).hexdigest()[:16]
 
-    # day set = the snapshot identity
-    days, snap = _snapshot(pages)
-    done = {r[0] for r in _done_keys(catalog, GLOBAL_DEDUP_STAGE).collect()}
-    if snap in done:
+    # the table is its own commit (see the resume contract)
+    days = _days(pages)
+    prior = (catalog.read("dup_clusters")
+             if catalog.exists("dup_clusters") else None)
+    prior_days = _days(prior) if prior is not None else []
+    snap = hashlib.md5(",".join(days).encode()).hexdigest()[:16]
+    if prior_days == days:
         return {"run_id": run_id, "snapshot": snap, "resumed": True}
 
     docs = pages.select(F.col("url").alias("id"), "text", "warc_date")
     all_ids = docs.select("id").distinct()
 
-    # delta eligibility: dup_clusters holds a committed strict-subset
-    # snapshot of the current day set
-    mode = "full"
-    prior = None
-    if incremental and catalog.exists("dup_clusters"):
-        prior = catalog.read("dup_clusters")
-        prior_days, prior_snap = _snapshot(prior)
-        if (prior_days and set(prior_days) < set(days)
-                and prior_snap in done):
-            mode = "delta"
-            new_days = sorted(set(days) - set(prior_days))
-
+    mode = ("delta" if incremental and prior_days
+            and set(prior_days) < set(days) else "full")
     if mode == "delta":
+        new_days = sorted(set(days) - set(prior_days))
         canon_ids = prior.filter("is_canonical").selectExpr("url AS id")
         pair_ids = canon_ids
         if delta_member_sample > 0:
@@ -292,10 +285,9 @@ def run_global_dedup(spark: SparkSession, warehouse: str,
                         (F.col("id") == F.col("label"))
                         .alias("is_canonical"),
                         "cluster_size"))
-    # whole-table replace, THEN the lineage commit — same barrier as
-    # run(). In delta mode `clusters` reads the dup_clusters it
-    # replaces; replace() writes a stage dir and swaps it in by rename,
-    # so the self-read is never overwritten and nothing is copied twice
+    # In delta mode `clusters` reads the dup_clusters it replaces;
+    # replace() writes a stage dir and swaps it in by rename, so the
+    # self-read is never overwritten and nothing is copied twice
     catalog.replace(clusters, "dup_clusters")
 
     stats = catalog.read("dup_clusters").agg(
@@ -308,6 +300,7 @@ def run_global_dedup(spark: SparkSession, warehouse: str,
         "run_id string, stage string, partition_key string, "
         "status string, rows_in long, rows_out long") \
         .withColumn("finished_ts", F.current_timestamp())
+    # the run record: written after the commit, never read back
     catalog.append(lin, "lineage")
     return {"run_id": run_id, "snapshot": snap, "resumed": False,
             # 'delta-approx', not 'delta': labels can diverge from a

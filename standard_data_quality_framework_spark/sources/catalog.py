@@ -85,16 +85,16 @@ class ParquetCatalog:
 
         A failed write or first rename leaves the live table as it was
         (the stage is removed). A crash between the two renames leaves
-        no table at ``<table>``: a caller whose commit record is written
-        after ``replace`` (``run_global_dedup``'s lineage row) sees no
-        committed table on the next run and rebuilds it from scratch.
+        no table at ``<table>``: a caller that takes the table as its
+        own commit (``run_global_dedup``) sees no table on the next run
+        and rebuilds it from scratch.
 
         The catalog has one writer per table, so every
         ``<table>.stage.*``/``<table>.old.*`` sibling found before the
         write is a crash's leftover and is removed. That includes a
-        complete stage found while the live table is missing: it is
-        deleted, not swapped in, because its commit record was never
-        written — the caller's full rebuild is the recovery. No leading
+        stage found while the live table is missing: it is deleted, not
+        swapped in, because a stage left by a killed write looks the
+        same — the caller's full rebuild is the recovery. No leading
         underscore in those names: Spark treats ``_``-prefixed paths as
         hidden."""
         live = self.path(table)

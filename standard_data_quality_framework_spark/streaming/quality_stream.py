@@ -14,6 +14,10 @@ Three entry points:
       RETRIED epoch rewrites exactly its own (batch_id=N, …)
       partitions instead of appending a second copy, so replays are
       idempotent (mode('append') here would be at-least-once).
+      Its (batch_id, warc_date) layout cannot share a directory with
+      the batch run's warc_date-partitioned pages_filtered (Spark
+      refuses to read mixed partition columns), so the CLI's
+      ``--streaming`` writes its own ``pages_filtered_stream`` table.
 
   streaming_quality_metrics — a pure append-mode aggregation stream:
       1-day event-time windows + watermark over the verdict stream,

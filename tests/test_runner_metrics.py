@@ -205,6 +205,63 @@ def test_run_evaluates_the_day_summary_once(spark, tmp_path, monkeypatch):
         assert "Aggregate" not in names, (table, names)
 
 
+def _failing(method, target):
+    """A ParquetCatalog ``method`` that raises for ``target`` and
+    writes every other table."""
+    real = getattr(ParquetCatalog, method)
+
+    def write(self, df, table, *args):
+        if table == target:
+            raise OSError("injected")
+        return real(self, df, table, *args)
+    return write
+
+
+def _run_rows(spark, wh, table):
+    """A table's rows, sorted, without the per-run run_id and
+    finished_ts; a map column as its key-sorted entries."""
+    df = spark.read.parquet(f"{wh}/{table}").drop("run_id", "finished_ts")
+    if "details" in df.columns:
+        df = df.withColumn("details", F.to_json(
+            F.array_sort(F.map_entries("details"))))
+    return sorted(map(repr, df.collect()))
+
+
+def test_run_crash_injection_rerun_equals_single_shot(spark, tmp_path,
+                                                      monkeypatch):
+    """Crash injection into runner.run's writes in commit order: the
+    pages_filtered, metrics and dropped_by_rule overwrites, then the
+    lineage append, raise in turn while half the days are pending.
+    Each rerun replays exactly the uncommitted days and leaves all
+    four tables equal to a single-shot run's."""
+    import shutil
+    pages = _small_pages(spark, tmp_path)
+    days = sorted(r[0] for r in pages.select(
+        F.to_date("warc_ts")).distinct().collect())
+    base = str(tmp_path / "wh_base")
+    r0 = run(spark, pages.filter(
+        F.to_date("warc_ts") <= F.lit(days[len(days) // 2])), base)
+    solo = str(tmp_path / "wh_solo")
+    run(spark, pages, solo)
+    tables = ("pages_filtered", "metrics", "dropped_by_rule", "lineage")
+    expected = {t: _run_rows(spark, solo, t) for t in tables}
+
+    for method, target in [("overwrite_partitions", "pages_filtered"),
+                           ("overwrite_partitions", "metrics"),
+                           ("overwrite_partitions", "dropped_by_rule"),
+                           ("append", "lineage")]:
+        wh = str(tmp_path / f"wh_fail_{target}")
+        shutil.copytree(base, wh)
+        with monkeypatch.context() as m:
+            m.setattr(ParquetCatalog, method, _failing(method, target))
+            with pytest.raises(OSError, match="injected"):
+                run(spark, pages, wh)
+        r = run(spark, pages, wh)
+        assert r["dates_processed"] == len(days) - r0["dates_processed"]
+        for t in tables:
+            assert _run_rows(spark, wh, t) == expected[t], (target, t)
+
+
 def test_schema_presence_guard(spark, pages_df, tmp_path):
     r = run(spark, pages_df, str(tmp_path / "whs"), run_id="s1")
     assert r["schema_presence"] == 1.0
@@ -642,3 +699,55 @@ def test_global_dedup_replace_failure_injection(spark, tmp_path,
         # the rerun's replace removed the crash's stray directories
         assert sorted(os.listdir(wh)) == [
             "dup_clusters", "lineage", "pages_filtered"], point
+
+
+_TMPL = "the exact template text one two three four five"
+_DAY12 = ([(f"a{i:02d}", 1, f"unique doc {i} " + _BASE[: 40 + i])
+           for i in range(5)]
+          + [("x1", 1, _TMPL), ("x2", 2, _TMPL),
+             ("w1", 1, _BASE), ("w2", 2, _BASE + " extra")])
+_DAY3 = [("z1", 3, _TMPL), ("w3", 3, _BASE + " other"),
+         ("c01", 3, "third day doc " + _BASE[10: 60])]
+
+
+def _two_phase(spark, wh):
+    """A full dedup over days 1-2, then day 3 lands in pages_filtered."""
+    _write_pages_filtered(spark, wh, _DAY12)
+    assert run_global_dedup(spark, wh, threshold=0.8)["mode"] == "full"
+    _write_pages_filtered(spark, wh, _DAY3, mode="append")
+
+
+def test_global_dedup_lost_lineage_append_is_resumed(spark, tmp_path,
+                                                     monkeypatch):
+    """dup_clusters is its own commit: a lineage append that fails
+    after the replace leaves the run committed, so the rerun resumes
+    and the table equals a single-shot run's."""
+    solo = str(tmp_path / "wh_solo")
+    _two_phase(spark, solo)
+    assert run_global_dedup(spark, solo, threshold=0.8)["mode"] \
+        == "delta-approx"
+    expected = _clusters(spark, solo)
+
+    wh = str(tmp_path / "wh")
+    _two_phase(spark, wh)
+    with monkeypatch.context() as m:
+        m.setattr(ParquetCatalog, "append", _failing("append", "lineage"))
+        with pytest.raises(OSError, match="injected"):
+            run_global_dedup(spark, wh, threshold=0.8)
+    r = run_global_dedup(spark, wh, threshold=0.8)
+    assert r["resumed"], r
+    pd.testing.assert_frame_equal(_clusters(spark, wh), expected)
+
+
+def test_global_dedup_of_a_removed_table_is_full(spark, tmp_path):
+    """A lineage row does not stand in for the table: with dup_clusters
+    removed, the rerun rebuilds it in full mode."""
+    import shutil
+    wh = str(tmp_path / "wh")
+    _write_pages_filtered(spark, wh, _DAY12)
+    assert run_global_dedup(spark, wh, threshold=0.8)["mode"] == "full"
+    expected = _clusters(spark, wh)
+    shutil.rmtree(f"{wh}/dup_clusters")
+    r = run_global_dedup(spark, wh, threshold=0.8)
+    assert not r["resumed"] and r["mode"] == "full", r
+    pd.testing.assert_frame_equal(_clusters(spark, wh), expected)

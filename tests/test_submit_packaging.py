@@ -75,7 +75,9 @@ def test_spark_submit_main_local_smoke():
 def test_spark_submit_main_global_dedup_and_streaming_modes():
     """The other two CLI modes, each as its own process/JVM: batch →
     --global-dedup chained on the same warehouse, and --streaming
-    (trigger-once) over the same input directory."""
+    (trigger-once) over the same input directory into its own table,
+    after which the batch tables still read: a second --global-dedup
+    resumes."""
     from standard_data_quality_framework_spark.fixtures import (
         write_pages_parquet)
     tmp = tempfile.mkdtemp()
@@ -96,7 +98,7 @@ def test_spark_submit_main_global_dedup_and_streaming_modes():
     ded = cli("--global-dedup", "--run-id", "d1")
     assert ded.returncode == 0, ded.stderr[-2000:]
     summary = json.loads(ded.stdout.strip().splitlines()[-1])
-    assert summary.get("mode") in ("full", "delta"), summary
+    assert summary.get("mode") == "full", summary
     assert summary.get("lsh_docs", 0) > 0, summary
     # the planted dup_frac copies are SAME-DAY exact dups, so the
     # pipeline's per-day exact dedup drops them before the warehouse
@@ -110,6 +112,10 @@ def test_spark_submit_main_global_dedup_and_streaming_modes():
     line = json.loads(st.stdout.strip().splitlines()[-1])
     assert line == {"mode": "streaming", "status": "done"}
     k = duckdb.sql(
-        f"select count(*) from '{wh}/pages_filtered/**/*.parquet'"
+        f"select count(*) from '{wh}/pages_filtered_stream/**/*.parquet'"
     ).fetchone()[0]
     assert k > 0
+
+    again = cli("--global-dedup", "--run-id", "d2")
+    assert again.returncode == 0, again.stderr[-2000:]
+    assert json.loads(again.stdout.strip().splitlines()[-1])["resumed"]
